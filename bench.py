@@ -638,8 +638,8 @@ def main() -> None:
     # lpa_build treatment): each pass restores the base state and
     # folds UNTIMED (costs priced by the loops above), then times the
     # amortized corpus-linear compact alone — the "when the delta
-    # grows past policy" rewrite label_compact_if_needed /
-    # labels.compact_if_needed trigger.
+    # grows past policy" rewrite the labels.compact_if_needed
+    # trigger runs.
     def _compact_pass(
         bname: str, restore_fn, roll_fn, compact_fn
     ) -> None:

@@ -29,6 +29,8 @@ function anywhere.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4557,6 +4559,7 @@ def _text_base_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
     rep_labels = cc_labels(nodes, und)
+    ckpts.append(rep_labels)
     gsz = m.groupBy("rep").agg(F.count(F.lit(1)).alias("g"))
     labels = (
         m.join(gsz, "rep")
@@ -4590,7 +4593,9 @@ def _text_inc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return keep_alive(out, sp, mh)
 
 
-def _text_rung() -> "object":
+@functools.cache
+def _text_label_rung() -> "object":
+    # built lazily (labels.py import stays off the hot path)
     from smile_spark.operators.labels import LabelRung
 
     def universe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4641,16 +4646,6 @@ def _text_rung() -> "object":
         # test); the nightly build runs cc at group-rep level
         base_labels=_text_base_labels,
     )
-
-
-TEXT_LABEL_RUNG = None  # built lazily (labels.py import stays off the hot path)
-
-
-def _text_label_rung():
-    global TEXT_LABEL_RUNG
-    if TEXT_LABEL_RUNG is None:
-        TEXT_LABEL_RUNG = _text_rung()
-    return TEXT_LABEL_RUNG
 
 
 def clear_text_label_cache() -> None:

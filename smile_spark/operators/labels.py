@@ -1,14 +1,10 @@
-"""Generic persisted cluster-label state for pair-graph dedup rungs.
+"""Persisted cluster-label state for every pair-graph dedup rung.
 
-The r14 label machinery (operators/multimodal.py — `_label_index_build`,
-`_clusters_incremental`, `label_rollforward`, `_rolled_label_state`,
-`label_compact`) gave the image/audio/video rungs the full production
-lifecycle: nightly base-cluster labels, an increment-linear fold, an
-LSM-style delta-log roll, and amortized compaction.  This module is
-that core made RUNG-GENERIC (VERDICT r14 next-round #2/#4), so the
-text rung (setsim ∪ MinHash pair graphs, operators/dedup.py) and the
-cross-modal rung (joint image+video graph, operators/multimodal.py)
-run the identical lifecycle without duplicating the machinery.
+One lifecycle serves all five cc-label rungs — image, audio and video
+(operators/multimodal.py), text (operators/dedup.py) and the joint
+cross-modal rung (operators/multimodal.py): nightly base-cluster
+labels, an increment-linear fold, an LSM-style delta-log roll, and
+amortized compaction.
 
 A rung is described by a :class:`LabelRung`: where its document
 universe comes from, how to produce its BASE↔BASE pair set (the
@@ -21,15 +17,16 @@ sidecar adoption contract, and the ADVICE-r14 crash ordering (remove
 the sidecar BEFORE the first append, write the rolled state LAST) —
 is shared code below.
 
-Collapse-correctness argument (the multimodal r14 proof, unchanged):
-a stored base label IS the min doc_id of its base component, so
-min-label cc over the COLLAPSED graph — increment docs plus touched
-base supernodes — yields exactly the labels of cc over the full joint
-pair graph.  Unlike the oriented multimodal fold (probe ids always on
-the `a` side), this core classifies EACH endpoint independently by
-the rung's increment predicate, so rungs whose incident pair set also
-contains increment↔increment edges (the cross-modal rung, whose
-rolled state must equal the full joint clustering) fold exactly too.
+Collapse-correctness argument: a stored base label IS the min doc_id
+of its base component, so min-label cc over the COLLAPSED graph —
+increment docs plus touched base supernodes — yields exactly the
+labels of cc over the full joint pair graph.  The fold classifies
+EACH endpoint independently by the rung's increment predicate, so
+the perceptual rungs' probe↔base pairs (increment always on the `a`
+side) and rungs whose incident pair set also contains
+increment↔increment edges (the cross-modal rung, whose rolled state
+must equal the full joint clustering) fold exactly through the same
+code.
 
 Scale: the base build is the once-per-snapshot corpus-linear job
 (priced cold in bench.py per rung); every fold is increment-sized
@@ -197,10 +194,10 @@ def _with_base_labels(
 ) -> None:
     """Compute the rung's BASE-block cc labels (id, component) and
     hand them to ``sink`` while the pair checkpoint backing the plan
-    is still alive (the multimodal `_with_base_labels` contract).  The
-    pair frame's own upstream checkpoints (setsim/LSH builders tie
-    theirs to the frame's gc) stay referenced until the local
-    checkpoint below has materialized."""
+    is still alive; that checkpoint and cc's final label table are
+    released once ``sink`` returns.  The pair frame's own upstream
+    checkpoints (the builders tie theirs to the frame's gc) stay
+    referenced until the local checkpoint below has materialized."""
     from smile_spark.operators.graph import cc_labels
     from smile_spark.session import unpersist_checkpoint
 
@@ -221,7 +218,11 @@ def _with_base_labels(
             pairs.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
         nodes = und.select(F.col("src").alias("id")).distinct()
-        sink(cc_labels(nodes, und))
+        labels = cc_labels(nodes, und)
+        try:
+            sink(labels)
+        finally:
+            unpersist_checkpoint(labels)
     finally:
         unpersist_checkpoint(pairs)
 
@@ -275,8 +276,9 @@ def _fold_delta(
     new assignment, 1 = remap of an existing base cluster label,
     2 = a previously-unpaired base doc pulled into a cluster.
 
-    Returns (delta(id, component, kind), endpoint_checkpoint) — the
-    caller must unpersist the checkpoint after consuming the delta.
+    Returns (delta(id, component, kind), checkpoints) — the caller
+    must unpersist the checkpoints (the endpoint map and cc's final
+    label table) after consuming the delta.
     Everything here is increment-sized at any corpus size; the only
     corpus-side touch is the id-keyed left join against the bucketed
     base label table."""
@@ -351,7 +353,7 @@ def _fold_delta(
             .alias("kind"),
         )
     )
-    return delta, m
+    return delta, [m, cc]
 
 
 def _keep_list(universe: DataFrame, labels: DataFrame) -> DataFrame:
@@ -396,7 +398,8 @@ def clusters_incremental(
     # inc is a self-contained checkpoint now; the source frame (and
     # any gc-tied upstream checkpoints it owns) may release
     del inc_src
-    delta, m = _fold_delta(spark, rung, inc, labels)
+    delta, ckpts = _fold_delta(spark, rung, inc, labels)
+    ckpts.append(inc)
     try:
         relabel = delta.select(
             F.col("id").alias("lbl0"), F.col("component").alias("c2")
@@ -425,10 +428,10 @@ def clusters_incremental(
             (F.col("doc_id") == F.col("lbl")).alias("keep"),
         )
     except Exception:
-        unpersist_checkpoint(m)
-        unpersist_checkpoint(inc)
+        for c in ckpts:
+            unpersist_checkpoint(c)
         raise
-    release_checkpoints_on_gc(out, [m, inc])
+    release_checkpoints_on_gc(out, ckpts)
     return out
 
 
@@ -502,7 +505,7 @@ def _roll_fold(
     inc_src = rung.inc_pairs(spark, sf_dir)
     inc = inc_src.select("a", "b").distinct().localCheckpoint()
     del inc_src
-    delta, m = _fold_delta(spark, rung, inc, labels)
+    delta, ckpts = _fold_delta(spark, rung, inc, labels)
     try:
         try:
             append_bucketed(
@@ -516,8 +519,8 @@ def _roll_fold(
                 drop_bucketed_table(spark, t)
             raise
     finally:
-        unpersist_checkpoint(m)
-        unpersist_checkpoint(inc)
+        for c in [*ckpts, inc]:
+            unpersist_checkpoint(c)
 
 
 def label_rollforward(
@@ -608,9 +611,10 @@ def label_compact(
     """LSM-style compaction: rewrite the base label table as the
     EFFECTIVE rolled state and truncate the delta — amortized
     corpus-linear.  Readers see an identical state before and after.
-    Crash contract: sidecar removed FIRST, rewritten LAST (the
-    multimodal label_compact ordering), so a crash anywhere inside
-    leaves no adoptable state."""
+    Crash contract: sidecar removed FIRST, rewritten LAST, so a crash
+    anywhere inside leaves no adoptable state.  The rewrite goes
+    through a temp table + catalog RENAME (a filesystem move for
+    managed parquet tables)."""
     from smile_spark.sources.bucketed import (
         drop_bucketed_table,
         read_bucketed,
@@ -625,6 +629,8 @@ def label_compact(
     name = _roll_sidecar_name(rung, sf_dir)
     _, pr = _roll_payloads(spark, sf_dir, rung)
     eff = rolled_label_state(spark, sf_dir, rung)
+    # schema-only: an overwrite whose plan READS the target table is
+    # rejected by Spark, so the empty delta is built from the schema
     empty_delta = spark.createDataFrame(
         [], read_bucketed(spark, tables["delta"]).schema
     )
@@ -646,8 +652,7 @@ def label_compact(
 def keep_list_sql(pairs_sql: str, universe_sql: str) -> str:
     """DuckDB twin of :func:`_keep_list`: the clustering replayed as a
     recursive min-reachability CTE over the same closed-form pair set
-    (the multimodal `_keep_list_sql` device, re-exported here so text
-    and cross-modal rung oracles need no multimodal import)."""
+    — the oracle of every cluster/keep-list query."""
     return (
         "WITH RECURSIVE pairs AS ("
         f" SELECT a, b FROM ({pairs_sql}) p),"

@@ -465,7 +465,7 @@ def _manifest_tagged(frames: dict[str, DataFrame]) -> DataFrame:
     tagged = None
     for _, reason in _INC_MANIFEST_RUNGS:
         part = frames[reason].select(
-            "a",
+            F.col("a").cast("bigint").alias("a"),
             F.col("b").cast("bigint").alias("b"),
             F.lit(reason).alias("reason"),
         )

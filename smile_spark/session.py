@@ -102,10 +102,10 @@ def unpersist_checkpoint(df) -> None:
     ``DataFrame.unpersist()`` only evicts CacheManager entries
     (``.cache()``/``.persist()``); a local checkpoint instead persists
     its internal RDD directly, reachable only through the analyzed
-    ``LogicalRDD``.  Session memos that discard checkpointed
-    DataFrames (the bench's cold ``*_build`` rebuild loops, ADVICE r08
-    #4) must release those blocks explicitly or they occupy executor
-    storage for the rest of the application.
+    ``LogicalRDD`` (under any column projections).  Session memos
+    that discard checkpointed DataFrames (the bench's cold ``*_build``
+    rebuild loops, ADVICE r08 #4) must release those blocks explicitly
+    or they occupy executor storage for the rest of the application.
 
     The checkpointed data becomes UNRECOVERABLE (lineage was
     truncated) — only call this on DataFrames no live consumer will
@@ -116,7 +116,12 @@ def unpersist_checkpoint(df) -> None:
     """
     global _UNPERSIST_WARNED
     try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        plan = df._jdf.queryExecution().analyzed()
+        # a column projection of a checkpoint (cc_labels' converged
+        # result) owns that checkpoint's blocks
+        while plan.nodeName() in ("Project", "SubqueryAlias"):
+            plan = plan.child()
+        plan.rdd().unpersist(False)
     except Exception as exc:  # noqa: BLE001 — leak beats crash here
         if not _UNPERSIST_WARNED:
             _UNPERSIST_WARNED = True

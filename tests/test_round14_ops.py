@@ -384,11 +384,12 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     a rebuild; a stale sidecar forces one."""
     import json
 
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
     tbl = M.image_label_index_build(spark, sf_dir)
-    M._LABEL_READY.clear()
+    L._RO_READY.clear()
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -406,7 +407,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    M._LABEL_READY.clear()
+    L._RO_READY.clear()
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -433,6 +434,11 @@ def test_increment_manifest_consistency(spark, sf_dir):
 
     rows = P.increment_ingest_manifest(spark, sf_dir).collect()
     assert rows and len({r.doc_id for r in rows}) == len(rows)
+    # the six rung frames union with both pair ids cast to bigint
+    tagged = P._manifest_tagged(P._manifest_frames(spark, sf_dir))
+    assert tagged.schema.simpleString() == (
+        "struct<a:bigint,b:bigint,reason:string>"
+    )
     rung_pairs = {
         "text_exact": D.setsim_incremental(spark, sf_dir),
         "text_minhash": D.dedup_minhash_incremental(spark, sf_dir),

@@ -21,18 +21,20 @@ def test_labels_rolled_agrees_with_incremental(spark, sf_dir, modality):
     physical state.  The delta must also be increment-sized: the
     whole point is that the nightly append never touches a base
     row."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = M._label_rung(modality)
     rolled = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     live = {
         tuple(r)
-        for r in M._clusters_incremental(spark, sf_dir, modality).collect()
+        for r in L.clusters_incremental(spark, sf_dir, rung).collect()
     }
     assert rolled == live
-    tables = M._labelroll_tables(sf_dir, modality)
+    tables = L.roll_tables(rung, sf_dir)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     n_base = read_bucketed(spark, tables["labels"]).count()
     sub_mod, sub_res, _ = M._BAND_MODALITY[modality]
@@ -135,12 +137,13 @@ def test_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     """A fresh 'session' (memo cleared, warehouse intact) must adopt
     the ROLLED label state without any drop/write/append job, and the
     reader must still serve from the adopted tables."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
     M.label_rollforward(spark, sf_dir, "image")
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == "image"]:
+        L._ROLL_READY.discard(key)
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -163,20 +166,21 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
     (1 append) — never adopt, never fold over unknown state."""
     import json
 
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
     M.label_rollforward(spark, sf_dir, "image")
     path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
+        spark, L._roll_sidecar_name(M._label_rung("image"), sf_dir)
     )
     with open(path) as fh:
         payload = json.load(fh)
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == "image"]:
+        L._ROLL_READY.discard(key)
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -197,131 +201,32 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
         assert json.load(fh)["state"] == "rolled"
 
 
-def test_labelroll_fold_failure_never_adoptable(
-    spark, sf_dir, monkeypatch
-):
-    """A crash mid-fold must leave NO adoptable state: tables dropped,
-    sidecar removed — so the next session rebuilds from scratch
-    instead of folding over (or reading) a half-appended delta."""
-    import os
-
-    from smile_spark.operators import multimodal as M
-    from smile_spark.sources import bucketed as BK
-
-    M.labelroll_restore_base(spark, sf_dir, "image")
-    path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
-    )
-    real_append = BK.append_bucketed
-
-    def dying_append(*a, **k):
-        raise RuntimeError("simulated executor loss mid-fold")
-
-    monkeypatch.setattr(BK, "append_bucketed", dying_append)
-    with pytest.raises(RuntimeError, match="mid-fold"):
-        M.label_rollforward(spark, sf_dir, "image")
-    assert not os.path.exists(path), (
-        "a failed fold left an adoptable sidecar behind"
-    )
-    tables = M._labelroll_tables(sf_dir, "image")
-    assert not any(
-        spark.catalog.tableExists(t) for t in tables.values()
-    ), "a failed fold left half-appended tables behind"
-    monkeypatch.setattr(BK, "append_bucketed", real_append)
-    # recovery: the next call runs the full rebuild + fold and serves
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
-    rolled = {
-        tuple(r) for r in M.image_labels_rolled(spark, sf_dir).collect()
-    }
-    live = {
-        tuple(r)
-        for r in M.image_clusters_incremental(spark, sf_dir).collect()
-    }
-    assert rolled == live
-
-
-def test_labelroll_crash_after_append_never_adopts_base(
-    spark, sf_dir, monkeypatch
-):
-    """The ADVICE r14 crash window: a hard crash AFTER the delta
-    append succeeds but BEFORE the rolled sidecar lands must leave no
-    adoptable BASE sidecar — a second fold over the already-appended
-    delta would double every delta row (and double cluster sizes
-    through the broadcast remap).  The fix removes the sidecar before
-    the append, so this crash point has no sidecar and the next call
-    takes the full-rebuild arm."""
-    import os
-
-    from smile_spark.operators import multimodal as M
-    from smile_spark.sources import bucketed as BK
-
-    M.labelroll_restore_base(spark, sf_dir, "image")
-    path = BK.sidecar_path(
-        spark, M._labelroll_sidecar_name(sf_dir, "image")
-    )
-    assert os.path.exists(path)
-    real_write_sidecar = BK.write_sidecar
-
-    def dying_write_sidecar(spark_, name, payload):
-        if payload.get("state") == "rolled":
-            raise RuntimeError("simulated process death pre-sidecar")
-        return real_write_sidecar(spark_, name, payload)
-
-    monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
-    with pytest.raises(RuntimeError, match="pre-sidecar"):
-        M.label_rollforward(spark, sf_dir, "image")
-    assert not os.path.exists(path), (
-        "a crash between the delta append and the rolled-sidecar"
-        " write left an adoptable sidecar behind"
-    )
-    monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    # recovery takes the full-rebuild arm (labels + empty delta = 2
-    # writes) and the rolled state still equals the live fold
-    for key in [k for k in M._LROLL_READY if k[2] == "image"]:
-        M._LROLL_READY.discard(key)
-    writes = []
-    real_write = BK.write_bucketed
-    monkeypatch.setattr(
-        BK,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a), real_write(*a, **k)),
-    )
-    rolled = {
-        tuple(r) for r in M.image_labels_rolled(spark, sf_dir).collect()
-    }
-    assert len(writes) == 2, "recovery must take the full-rebuild arm"
-    live = {
-        tuple(r)
-        for r in M.image_clusters_incremental(spark, sf_dir).collect()
-    }
-    assert rolled == live
-
-
 @pytest.mark.parametrize("modality", ["image", "audio", "video"])
 def test_label_compact_preserves_state(spark, sf_dir, modality):
     """Compaction must be invisible to readers (identical keep list),
     empty the delta, keep the rolled sidecar adoptable — and a fresh
     'session' must ADOPT the compacted state without any job."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = M._label_rung(modality)
     before = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     tables = M.label_compact(spark, sf_dir, modality)
     after = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert before == after, "compaction changed the visible state"
     assert read_bucketed(spark, tables["delta"]).count() == 0
     # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in M._LROLL_READY if k[2] == modality]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == modality]:
+        L._ROLL_READY.discard(key)
     got = M.label_rollforward(spark, sf_dir, modality)
     assert got == tables
     post = {
-        tuple(r) for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        tuple(r) for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert post == before
 
@@ -333,29 +238,29 @@ def test_label_compact_policy(spark, sf_dir, modality):
     a zero threshold compacts any non-empty delta; the visible state
     is identical throughout (the invisibility contract, extended to
     the policy path)."""
+    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources.bucketed import read_bucketed
 
+    rung = M._label_rung(modality)
     # restore a freshly-folded state so the policy decision observes
     # a real (possibly empty, for video's tiny increment) delta
     M.labelroll_restore_base(spark, sf_dir, modality)
-    for key in [k for k in M._LROLL_READY if k[2] == modality]:
-        M._LROLL_READY.discard(key)
+    for key in [k for k in L._ROLL_READY if k[2] == modality]:
+        L._ROLL_READY.discard(key)
     tables = M.label_rollforward(spark, sf_dir, modality)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     before = {
         tuple(r)
-        for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert (
-        M.label_compact_if_needed(
-            spark, sf_dir, modality, max_delta_frac=1e18
-        )
+        L.compact_if_needed(spark, sf_dir, rung, max_delta_frac=1e18)
         is False
     )
     assert read_bucketed(spark, tables["delta"]).count() == n_delta
-    compacted = M.label_compact_if_needed(
-        spark, sf_dir, modality, max_delta_frac=0.0
+    compacted = L.compact_if_needed(
+        spark, sf_dir, rung, max_delta_frac=0.0
     )
     # zero threshold compacts iff any delta rows exist
     assert compacted is (n_delta > 0)
@@ -363,6 +268,6 @@ def test_label_compact_policy(spark, sf_dir, modality):
         assert read_bucketed(spark, tables["delta"]).count() == 0
     after = {
         tuple(r)
-        for r in M._labels_rolled(spark, sf_dir, modality).collect()
+        for r in L.labels_rolled(spark, sf_dir, rung).collect()
     }
     assert before == after, "the policy path changed the visible state"

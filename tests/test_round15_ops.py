@@ -114,57 +114,6 @@ def test_text_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     assert jobs == [], "the rolled reader ran a rebuild/fold job"
 
 
-def test_text_labelroll_crash_never_adopts_base(
-    spark, sf_dir, monkeypatch
-):
-    """The ADVICE-r14 crash ordering, pinned on the GENERIC core: a
-    crash after the delta append but before the rolled sidecar leaves
-    no adoptable state; recovery takes the full-rebuild arm."""
-    import os
-
-    from smile_spark.operators import dedup as D
-    from smile_spark.operators import labels as L
-    from smile_spark.sources import bucketed as BK
-
-    rung = D._text_label_rung()
-    D.text_labelroll_restore_base(spark, sf_dir)
-    path = BK.sidecar_path(spark, L._roll_sidecar_name(rung, sf_dir))
-    assert os.path.exists(path)
-    real_write_sidecar = BK.write_sidecar
-
-    def dying_write_sidecar(spark_, name, payload):
-        if payload.get("state") == "rolled":
-            raise RuntimeError("simulated process death pre-sidecar")
-        return real_write_sidecar(spark_, name, payload)
-
-    monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
-    with pytest.raises(RuntimeError, match="pre-sidecar"):
-        D.text_label_rollforward(spark, sf_dir)
-    assert not os.path.exists(path), (
-        "a crash between the delta append and the rolled-sidecar"
-        " write left an adoptable sidecar behind"
-    )
-    monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
-    writes = []
-    real_write = BK.write_bucketed
-    monkeypatch.setattr(
-        BK,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a), real_write(*a, **k)),
-    )
-    rolled = {
-        tuple(r) for r in D.text_labels_rolled(spark, sf_dir).collect()
-    }
-    assert len(writes) == 2, "recovery must take the full-rebuild arm"
-    live = {
-        tuple(r)
-        for r in D.text_clusters_incremental(spark, sf_dir).collect()
-    }
-    assert rolled == live
-
-
 def test_text_label_compact_and_policy(spark, sf_dir):
     """Compaction must be invisible (identical keep list, empty delta,
     rolled sidecar still adoptable), and the POLICY must trigger on
