@@ -34,6 +34,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smile_spark.sources import bucketed as BK
 from smile_spark.tables import fan_out, table
 
 SHINGLE_K = 12          # character shingle width
@@ -487,16 +488,9 @@ def _lsh_verify_pairs(
     )
     # The distinct shingle set feeds three consumers (sizes, both join
     # sides); checkpoint so the explode+distinct runs once, not thrice.
-    # 64-bit shingle keys (r16, the dedup_eval/setsim device): the
-    # equi-join and intersection counts are identical under injective
-    # rekeying, 8-byte longs shuffle/compare cheaper than 12-char
-    # strings, and a collision would fail the string-semantics oracle
-    # of every consumer rather than ship silently.
-    sh = (
-        _shingles(cand_docs)
-        .select("doc_id", F.xxhash64("sh").alias("sh"))
-        .localCheckpoint()
-    )
+    # The join key is the shingle STRING: this is an exact path, and a
+    # hashed key would count a colliding shingle pair as shared.
+    sh = _shingles(cand_docs).localCheckpoint()
     ckpts.append(sh)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh.select(F.col("doc_id").alias("a"), "sh")
@@ -599,8 +593,6 @@ def dedup_minhash_lsh_sql() -> str:
 # --- persisted MinHash band index + incremental probe ----------------------
 
 MINHASH_INDEX_BUCKETS = 16
-_MH_INDEX_READY: set[tuple[str, str]] = set()
-_MH_INDEX_SIDECARS: set[str] = set()
 
 
 def _mh_index_table(sf_dir: str) -> str:
@@ -613,17 +605,24 @@ def _mh_index_table(sf_dir: str) -> str:
 
 
 def clear_minhash_index_cache() -> None:
-    """Forget the per-process index memo AND drop the adoption
-    sidecars this process wrote, so the next probe (or the bench's
-    cold ``minhash_index_build`` loop) reruns the full signature +
-    band + write path.  The build overwrites the table in place —
-    nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
+    """Clear the MinHash band index (bench cold ``minhash_index_build``)."""
+    BK.clear("minhash_index")
 
-    _MH_INDEX_READY.clear()
-    for path in list(_MH_INDEX_SIDECARS):
-        remove_sidecar_file(path)
-        _MH_INDEX_SIDECARS.discard(path)
+
+def _mh_bands_write(
+    spark: SparkSession, sf_dir: str, tbl: str, pred, append: bool = False
+) -> None:
+    """Signature + band rows of the documents matching ``pred``,
+    written (or appended) to the bucketed band table ``tbl``."""
+    docs = table(spark, sf_dir, "documents").filter(pred)
+    bands = _lsh_bands_from_sig(_minhash_sig_from_docs(docs))
+    if append:
+        BK.append_bucketed(
+            bands, tbl, "bkey", n_buckets=MINHASH_INDEX_BUCKETS
+        )
+        return
+    BK.drop_bucketed_table(spark, tbl)
+    BK.write_bucketed(bands, tbl, "bkey", n_buckets=MINHASH_INDEX_BUCKETS)
 
 
 def minhash_index_build(spark: SparkSession, sf_dir: str) -> str:
@@ -637,49 +636,32 @@ def minhash_index_build(spark: SparkSession, sf_dir: str) -> str:
     dedup ladder: exact set-similarity (``setsim_index_build``),
     MinHash-LSH (here), and the perceptual image/audio rungs
     (``dhash_index_build``/``audio_index_build``) all share the same
-    nightly-index + increment-linear-probe shape and the same sidecar
-    adoption contract.  At 100 TB the corpus pays its shingle +
-    signature pass once per snapshot; each daily ingest signatures
+    nightly-index + increment-linear-probe shape and the same
+    :func:`bucketed.ensure` lifecycle.  At 100 TB the corpus pays its
+    shingle + signature pass once per snapshot; each daily ingest signatures
     only its own documents.
     """
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-
     tbl = _mh_index_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MH_INDEX_READY:
-        return tbl
-    base = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
+    base_pred = F.col("doc_id") % SETSIM_INC_MOD != 0
+    BK.ensure(
+        spark,
+        "minhash_index",
+        tbl,
+        [tbl],
+        lambda: {
+            "base_rows": table(spark, sf_dir, "documents")
+            .filter(base_pred)
+            .count(),
+            "inc_mod": SETSIM_INC_MOD,
+            "n_buckets": MINHASH_INDEX_BUCKETS,
+            "n_hashes": N_HASHES,
+            "n_bands": N_BANDS,
+            "shingle_k": SHINGLE_K,
+            "sf_dir": sf_dir,
+            "tables": [tbl],
+        },
+        lambda: _mh_bands_write(spark, sf_dir, tbl, base_pred),
     )
-    expected = {
-        "base_rows": base.count(),
-        "inc_mod": SETSIM_INC_MOD,
-        "n_buckets": MINHASH_INDEX_BUCKETS,
-        "n_hashes": N_HASHES,
-        "n_bands": N_BANDS,
-        "shingle_k": SHINGLE_K,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2) so the bench's cold loop always
-        # restores the full rebuild path
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _MH_INDEX_SIDECARS.add(sidecar_path(spark, tbl))
-        _MH_INDEX_READY.add(key)
-        return tbl
-    bands = _lsh_bands_from_sig(_minhash_sig_from_docs(base))
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(bands, tbl, "bkey", n_buckets=MINHASH_INDEX_BUCKETS)
-    _MH_INDEX_SIDECARS.add(write_sidecar(spark, tbl, expected))
-    _MH_INDEX_READY.add(key)
     return tbl
 
 
@@ -812,8 +794,6 @@ MINHASH_INCREMENTAL_SQL = (
 # folded copies of its own probe block.
 
 MINHASH_ROLL_MOD = 2 * SETSIM_INC_MOD
-_MH_ROLL_READY: set[tuple[str, str]] = set()
-_MH_ROLL_SIDECARS: set[str] = set()
 
 
 def _mh_roll_table(sf_dir: str) -> str:
@@ -822,130 +802,59 @@ def _mh_roll_table(sf_dir: str) -> str:
     return bucket_table_name("mh_roll_bands", sf_dir)
 
 
-def _mh_roll_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
-    docs = table(spark, sf_dir, "documents")
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        ).count(),
-        "inc_mod": SETSIM_INC_MOD,
-        "roll_mod": MINHASH_ROLL_MOD,
-        "n_buckets": MINHASH_INDEX_BUCKETS,
-        "n_hashes": N_HASHES,
-        "n_bands": N_BANDS,
-        "shingle_k": SHINGLE_K,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % MINHASH_ROLL_MOD == 0
-    ).count()
-    return base, rolled
+def _mh_roll_spec(spark: SparkSession, sf_dir: str) -> dict:
+    """The MinHash roll artifact's lifecycle arguments, shared by
+    :func:`minhash_index_rollforward` and the restore-base device."""
+    tbl = _mh_roll_table(sf_dir)
+    base_pred = F.col("doc_id") % SETSIM_INC_MOD != 0
+    return dict(
+        family="minhash_roll",
+        name=tbl,
+        tables=[tbl],
+        payload=lambda: {
+            "base_rows": table(spark, sf_dir, "documents")
+            .filter(base_pred)
+            .count(),
+            "inc_mod": SETSIM_INC_MOD,
+            "roll_mod": MINHASH_ROLL_MOD,
+            "n_buckets": MINHASH_INDEX_BUCKETS,
+            "n_hashes": N_HASHES,
+            "n_bands": N_BANDS,
+            "shingle_k": SHINGLE_K,
+            "sf_dir": sf_dir,
+            "tables": [tbl],
+        },
+        write_base=lambda: _mh_bands_write(spark, sf_dir, tbl, base_pred),
+    )
 
 
 def clear_minhash_roll_cache() -> None:
-    """Forget the roll memo AND drop this process' adoption sidecars
-    (built or adopted), restoring the cold base-rebuild + fold path."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _MH_ROLL_READY.clear()
-    for path in list(_MH_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _MH_ROLL_SIDECARS.discard(path)
+    """Clear the MinHash roll (bench cold ``minhash_rollforward``)."""
+    BK.clear("minhash_roll")
 
 
 def minhash_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
     """Bench/test device: force the roll table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _mh_roll_table(sf_dir)
-    _MH_ROLL_READY.discard((spark.sparkContext.applicationId, sf_dir))
-    base = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _lsh_bands_from_sig(_minhash_sig_from_docs(base)),
-        tbl,
-        "bkey",
-        n_buckets=MINHASH_INDEX_BUCKETS,
-    )
-    pb, _ = _mh_roll_payloads(spark, sf_dir, tbl)
-    _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, **_mh_roll_spec(spark, sf_dir))
 
 
 def minhash_index_rollforward(spark: SparkSession, sf_dir: str) -> str:
     """Advance the persisted MinHash band index to cover base ∪ fold
-    by appending the fold block's signature band rows — the
-    setsim_index_rollforward three-state contract (adopt rolled →
-    fold over base → full rebuild then fold); a failed append drops
-    the table and sidecar so a half-appended index never adopts."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
+    by appending the fold block's signature band rows (a
+    :func:`bucketed.roll` artifact)."""
     tbl = _mh_roll_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MH_ROLL_READY:
-        return tbl
-    pb, pr = _mh_roll_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _MH_ROLL_SIDECARS.add(sidecar_path(spark, tbl))
-        _MH_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        base = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        )
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _lsh_bands_from_sig(_minhash_sig_from_docs(base)),
-            tbl,
-            "bkey",
-            n_buckets=MINHASH_INDEX_BUCKETS,
-        )
-        _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): remove the sidecar BEFORE the
-    # append so a crash between the append and the rolled write can
-    # never leave a BASE sidecar adoptable over a folded table (a
-    # second fold would silently duplicate band rows)
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _MH_ROLL_SIDECARS.discard(scpath)
-    fold = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % MINHASH_ROLL_MOD == 0
+    fold_pred = F.col("doc_id") % MINHASH_ROLL_MOD == 0
+    BK.roll(
+        spark,
+        **_mh_roll_spec(spark, sf_dir),
+        fold_rows=lambda: table(spark, sf_dir, "documents")
+        .filter(fold_pred)
+        .count(),
+        fold=lambda: _mh_bands_write(
+            spark, sf_dir, tbl, fold_pred, append=True
+        ),
     )
-    try:
-        append_bucketed(
-            _lsh_bands_from_sig(_minhash_sig_from_docs(fold)),
-            tbl,
-            "bkey",
-            n_buckets=MINHASH_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _MH_ROLL_SIDECARS.discard(scpath)
-        raise
-    _MH_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _MH_ROLL_READY.add(key)
     return tbl
 
 
@@ -1348,8 +1257,6 @@ SEMANTIC_DEDUP_SQL = semantic_dedup_sql()
 # shared vec_id % 5 == 0 block.
 SEM_INC_MOD = 5
 SEM_INDEX_BUCKETS = 16
-_SEM_INDEX_READY: set[tuple[str, str]] = set()
-_SEM_INDEX_SIDECARS: set[str] = set()
 
 
 def _sem_index_table(sf_dir: str) -> str:
@@ -1362,16 +1269,8 @@ def _sem_index_table(sf_dir: str) -> str:
 
 
 def clear_semantic_index_cache() -> None:
-    """Forget the per-process memo AND drop this process' adoption
-    sidecars, so the next probe (or the bench's cold
-    ``semantic_index_build`` loop) runs the full assign + write path.
-    The build overwrites the table in place — nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SEM_INDEX_READY.clear()
-    for path in list(_SEM_INDEX_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_INDEX_SIDECARS.discard(path)
+    """Clear the SemDeDup index (bench cold ``semantic_index_build``)."""
+    BK.clear("semantic_index")
 
 
 def _sem_base_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1392,58 +1291,30 @@ def semantic_index_build(spark: SparkSession, sf_dir: str) -> str:
     """Persist the SemDeDup base assignment (cid, vec_id, v, d2)
     bucketed by cid — the corpus-linear nightly job.  Every daily
     probe then reads pre-bucketed cluster-mates with zero exchange on
-    the corpus side.  Sidecar adoption follows the setsim contract:
-    a fresh session adopts a matching index instead of rebuilding;
-    a stale sidecar (snapshot changed) forces the rebuild; the cold
-    path stays behind :func:`clear_semantic_index_cache` for bench
-    pricing (``semantic_index_build``)."""
-    from smile_spark.operators.similarity import (
-        CENTROID_MOD,
-        _assign,
-        _vectors,
-    )
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
+    the corpus side (a :func:`bucketed.ensure` artifact)."""
+    from smile_spark.operators.similarity import CENTROID_MOD, _vectors
 
     tbl = _sem_index_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_INDEX_READY:
-        return tbl
-    base = _vectors(spark, sf_dir).filter(
-        F.col("vec_id") % SEM_INC_MOD != 0
+    BK.ensure(
+        spark,
+        "semantic_index",
+        tbl,
+        [tbl],
+        lambda: {
+            "base_rows": _vectors(spark, sf_dir)
+            .filter(F.col("vec_id") % SEM_INC_MOD != 0)
+            .count(),
+            "op": "semantic",
+            "inc_mod": SEM_INC_MOD,
+            "centroid_mod": CENTROID_MOD,
+            "n_buckets": SEM_INDEX_BUCKETS,
+            "sf_dir": sf_dir,
+            "tables": [tbl],
+        },
+        lambda: _sem_assign_write(
+            spark, sf_dir, tbl, F.col("vec_id") % SEM_INC_MOD != 0
+        ),
     )
-    n_base = base.count()
-    expected = {
-        "base_rows": n_base,
-        "op": "semantic",
-        "inc_mod": SEM_INC_MOD,
-        "centroid_mod": CENTROID_MOD,
-        "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2): without this, a fresh process
-        # over an existing warehouse adopts here and
-        # clear_semantic_index_cache cannot force the cold
-        # assign+write path the bench's semantic_index_build prices
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _SEM_INDEX_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_INDEX_READY.add(key)
-        return tbl
-    assigned = _assign(base, _sem_base_centroids(spark, sf_dir)).select(
-        "cid", "vec_id", "v", "d2"
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(assigned, tbl, "cid", n_buckets=SEM_INDEX_BUCKETS)
-    _SEM_INDEX_SIDECARS.add(write_sidecar(spark, tbl, expected))
-    _SEM_INDEX_READY.add(key)
     return tbl
 
 
@@ -1574,42 +1445,12 @@ def semantic_dedup_incremental_sql() -> str:
 # vec_id % 10 == 5, rolled coverage vec_id % 10 != 5.
 
 SEM_ROLL_MOD = 2 * SEM_INC_MOD
-_SEM_ROLL_READY: set[tuple[str, str]] = set()
-_SEM_ROLL_SIDECARS: set[str] = set()
 
 
 def _sem_roll_table(sf_dir: str) -> str:
     from smile_spark.sources.bucketed import bucket_table_name
 
     return bucket_table_name("sem_roll_assign", sf_dir)
-
-
-def _sem_roll_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
-    from smile_spark.operators.similarity import CENTROID_MOD, _vectors
-
-    vecs = _vectors(spark, sf_dir)
-    base = {
-        "state": "base",
-        "base_rows": vecs.filter(
-            F.col("vec_id") % SEM_INC_MOD != 0
-        ).count(),
-        "op": "semantic",
-        "centroid_rule": "base-block-subsample",
-        "centroid_mod": CENTROID_MOD,
-        "inc_mod": SEM_INC_MOD,
-        "roll_mod": SEM_ROLL_MOD,
-        "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = vecs.filter(
-        F.col("vec_id") % SEM_ROLL_MOD == 0
-    ).count()
-    return base, rolled
 
 
 def _sem_assign_block(
@@ -1625,99 +1466,72 @@ def _sem_assign_block(
     ).select("cid", "vec_id", "v", "d2")
 
 
-def clear_semantic_roll_cache() -> None:
-    """Forget the roll memo AND drop this process' adoption sidecars
-    (built or adopted), restoring the cold base-rebuild + fold path."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
+def _sem_assign_write(
+    spark: SparkSession, sf_dir: str, tbl: str, pred, append: bool = False
+) -> None:
+    """Write (or append) one block's assignment rows to the bucketed
+    assignment table ``tbl``."""
+    rows = _sem_assign_block(spark, sf_dir, pred)
+    if append:
+        BK.append_bucketed(rows, tbl, "cid", n_buckets=SEM_INDEX_BUCKETS)
+        return
+    BK.drop_bucketed_table(spark, tbl)
+    BK.write_bucketed(rows, tbl, "cid", n_buckets=SEM_INDEX_BUCKETS)
 
-    _SEM_ROLL_READY.clear()
-    for path in list(_SEM_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_ROLL_SIDECARS.discard(path)
+
+def _sem_roll_spec(spark: SparkSession, sf_dir: str) -> dict:
+    """The SemDeDup roll artifact's lifecycle arguments, shared by
+    :func:`semantic_index_rollforward` and the restore-base device."""
+    from smile_spark.operators.similarity import CENTROID_MOD, _vectors
+
+    tbl = _sem_roll_table(sf_dir)
+    base_pred = F.col("vec_id") % SEM_INC_MOD != 0
+    return dict(
+        family="semantic_roll",
+        name=tbl,
+        tables=[tbl],
+        payload=lambda: {
+            "base_rows": _vectors(spark, sf_dir).filter(base_pred).count(),
+            "op": "semantic",
+            "centroid_rule": "base-block-subsample",
+            "centroid_mod": CENTROID_MOD,
+            "inc_mod": SEM_INC_MOD,
+            "roll_mod": SEM_ROLL_MOD,
+            "n_buckets": SEM_INDEX_BUCKETS,
+            "sf_dir": sf_dir,
+            "tables": [tbl],
+        },
+        write_base=lambda: _sem_assign_write(spark, sf_dir, tbl, base_pred),
+    )
+
+
+def clear_semantic_roll_cache() -> None:
+    """Clear the SemDeDup roll (bench cold ``semantic_rollforward``)."""
+    BK.clear("semantic_roll")
 
 
 def semantic_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
     """Bench/test device: force the roll table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_roll_table(sf_dir)
-    _SEM_ROLL_READY.discard((spark.sparkContext.applicationId, sf_dir))
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _sem_assign_block(
-            spark, sf_dir, F.col("vec_id") % SEM_INC_MOD != 0
-        ),
-        tbl,
-        "cid",
-        n_buckets=SEM_INDEX_BUCKETS,
-    )
-    pb, _ = _sem_roll_payloads(spark, sf_dir, tbl)
-    _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, **_sem_roll_spec(spark, sf_dir))
 
 
 def semantic_index_rollforward(spark: SparkSession, sf_dir: str) -> str:
     """Advance the persisted SemDeDup assignment index to cover
     base ∪ fold by appending the fold block's frozen-model assignment
-    rows — the setsim_index_rollforward three-state contract; a
-    failed append drops the table and sidecar so a half-appended
-    index never adopts."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
+    rows (a :func:`bucketed.roll` artifact)."""
+    from smile_spark.operators.similarity import _vectors
 
     tbl = _sem_roll_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_ROLL_READY:
-        return tbl
-    pb, pr = _sem_roll_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _SEM_ROLL_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _sem_assign_block(
-                spark, sf_dir, F.col("vec_id") % SEM_INC_MOD != 0
-            ),
-            tbl,
-            "cid",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-        _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): no adoptable sidecar while the
-    # fold append runs — remove first, write the rolled state last
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _SEM_ROLL_SIDECARS.discard(scpath)
-    try:
-        append_bucketed(
-            _sem_assign_block(
-                spark, sf_dir, F.col("vec_id") % SEM_ROLL_MOD == 0
-            ),
-            tbl,
-            "cid",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _SEM_ROLL_SIDECARS.discard(scpath)
-        raise
-    _SEM_ROLL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _SEM_ROLL_READY.add(key)
+    fold_pred = F.col("vec_id") % SEM_ROLL_MOD == 0
+    BK.roll(
+        spark,
+        **_sem_roll_spec(spark, sf_dir),
+        fold_rows=lambda: _vectors(spark, sf_dir).filter(fold_pred).count(),
+        fold=lambda: _sem_assign_write(
+            spark, sf_dir, tbl, fold_pred, append=True
+        ),
+    )
     return tbl
 
 
@@ -2959,7 +2773,6 @@ SETSIM_INCREMENTAL_SQL = (
 #   reps(rb, ts)          bucketed by rb  — verify-side token arrays
 #   members(rb, b)        bucketed by rb  — rep -> doc expansion
 SETSIM_INDEX_BUCKETS = 16
-_SETSIM_INDEX_READY: set[tuple[str, str, bool]] = set()
 
 
 def _setsim_hash_conf(spark: SparkSession) -> bool:
@@ -2974,7 +2787,7 @@ def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
 
     SINGLE-WRITER ASSUMPTION (ADVICE r12 #3): the tables (and their
     warehouse directories) are catalog/warehouse-global per (sf_dir,
-    mode) while the ``_SETSIM_INDEX_READY`` memo is per-process — a
+    mode) while the lifecycle memo is per-process — a
     second concurrent application that decides to rebuild runs
     ``drop_bucketed_table`` (which also rm -rf's the warehouse dir)
     and can yank files out from under another application's in-flight
@@ -2993,26 +2806,43 @@ def _setsim_index_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
     }
 
 
-# sidecar files this process wrote — removed by clear_setsim_index_cache
-# so the bench's cold loop forces the full drop-and-rebuild path
-# instead of adopting the index it just built
-_SETSIM_SIDECARS: set[str] = set()
+def _setsim_sidecar_name(kind: str, sf_dir: str, hash_tokens: bool) -> str:
+    """Sidecar name of the setsim ``kind`` ("idx" or "roll") artifact,
+    (mode, sf_dir)-scoped exactly like its tables."""
+    from smile_spark.sources.bucketed import bucket_table_name
+
+    return bucket_table_name(
+        f"setsim_{kind}_{'h1' if hash_tokens else 'h0'}", sf_dir
+    )
+
+
+def _setsim_base_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") % SETSIM_INC_MOD != 0
+    )
+
+
+def _setsim_payload(
+    spark: SparkSession, sf_dir: str, hash_tokens: bool, tables: dict
+) -> dict:
+    """Snapshot fingerprint shared by the index and roll sidecars:
+    base-block row count (one cheap column-pruned count) plus every
+    parameter the persisted tables depend on."""
+    return {
+        "base_rows": _setsim_base_docs(spark, sf_dir).count(),
+        "hash_tokens": hash_tokens,
+        "n_buckets": SETSIM_INDEX_BUCKETS,
+        "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
+        "inc_mod": SETSIM_INC_MOD,
+        "prefix_cols": ["rb", "tok", "nb", "pos"],
+        "sf_dir": sf_dir,
+        "tables": sorted(tables.values()),
+    }
 
 
 def clear_setsim_index_cache() -> None:
-    """Forget the per-application index memo AND drop the adoption
-    sidecars this process wrote, so the next probe (or the bench's
-    cold ``setsim_index_build`` loop) runs the full drop-and-rebuild
-    path — without the sidecar removal, the rebuild would ADOPT the
-    tables it just wrote and the cold entry would price a no-op.  The
-    build overwrites the tables in place (drop + saveAsTable), so no
-    block storage leaks — nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SETSIM_INDEX_READY.clear()
-    for path in list(_SETSIM_SIDECARS):
-        remove_sidecar_file(path)
-        _SETSIM_SIDECARS.discard(path)
+    """Clear the setsim index (bench cold ``setsim_index_build``)."""
+    BK.clear("setsim_index")
 
 
 def _setsim_index_write(
@@ -3024,9 +2854,8 @@ def _setsim_index_write(
     """Compute and persist the four setsim index tables for ``docs``
     (the corpus-linear pass: tokenize, per-side GroupJoin collapse,
     document frequencies, AllPairs prefixes), dropping any prior
-    version first.  Shared by :func:`setsim_index_build` and the
-    roll-forward family's base rebuild; sidecar/memo bookkeeping stays
-    with the callers.  Build-time checkpoints are consumed and
+    version first.  The base writer of both :func:`setsim_index_build`
+    and the roll-forward family.  Build-time checkpoints are consumed and
     released in the finally block even when a drop/write throws
     (ADVICE r12 #2)."""
     from pyspark.sql.window import Window
@@ -3123,66 +2952,22 @@ def setsim_index_build(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     the ``ann_ivf_indexed`` persist-and-probe contract applied to set
     similarity.  The token-hash mode is baked into the table names, so
     flipping ``spark.smile.setsim.tokenHash`` mid-session can never
-    serve an index built under the other tokenization.
-
-    A session whose per-process memo is empty first tries to ADOPT
-    the existing tables (VERDICT r12 next-round #5): a sidecar JSON
-    written after the tables records the base-block row count and the
-    build parameters, and when it matches what this build would
-    produce — and the catalog still knows all four tables — the
-    corpus-linear pass is skipped entirely.  A stale sidecar (the
-    snapshot changed) or missing tables fall through to the
-    drop-and-rebuild path, which stays behind
-    :func:`clear_setsim_index_cache` for the bench's cold pricing.
+    serve an index built under the other tokenization.  A
+    :func:`bucketed.ensure` artifact: a fresh session adopts matching
+    tables instead of repeating the corpus-linear pass.
     """
-    from smile_spark.sources.bucketed import (
-        sidecar_adoptable,
-        write_sidecar,
-    )
-
     hash_tokens = _setsim_hash_conf(spark)
     tables = _setsim_index_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    if key in _SETSIM_INDEX_READY:
-        return tables
-    docs = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
+    BK.ensure(
+        spark,
+        "setsim_index",
+        _setsim_sidecar_name("idx", sf_dir, hash_tokens),
+        list(tables.values()),
+        lambda: _setsim_payload(spark, sf_dir, hash_tokens, tables),
+        lambda: _setsim_index_write(
+            spark, _setsim_base_docs(spark, sf_dir), tables, hash_tokens
+        ),
     )
-    # snapshot fingerprint: base-block row count + every parameter the
-    # persisted tables depend on (one cheap column-pruned count); the
-    # sidecar name is (mode, sf_dir)-scoped exactly like the tables
-    from smile_spark.sources.bucketed import bucket_table_name
-
-    sidecar_name = bucket_table_name(
-        f"setsim_idx_{'h1' if hash_tokens else 'h0'}", sf_dir
-    )
-    expected = {
-        "base_rows": docs.count(),
-        "hash_tokens": hash_tokens,
-        "n_buckets": SETSIM_INDEX_BUCKETS,
-        "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
-        "inc_mod": SETSIM_INC_MOD,
-        "prefix_cols": ["rb", "tok", "nb", "pos"],
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    if sidecar_adoptable(
-        spark, sidecar_name, expected, list(tables.values())
-    ):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2): clear_setsim_index_cache must be
-        # able to force a true cold rebuild even when this process
-        # only ever adopted a prior application's index
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _SETSIM_SIDECARS.add(sidecar_path(spark, sidecar_name))
-        _SETSIM_INDEX_READY.add(key)
-        return tables
-    _setsim_index_write(spark, docs, tables, hash_tokens)
-    # tables are complete — record the snapshot fingerprint so a
-    # later session (on a metastore-backed catalog) can adopt them
-    _SETSIM_SIDECARS.add(write_sidecar(spark, sidecar_name, expected))
-    _SETSIM_INDEX_READY.add(key)
     return tables
 
 
@@ -3414,8 +3199,6 @@ def _setsim_probe_indexed(
 # observable.
 
 SETSIM_ROLL_MOD = 2 * SETSIM_INC_MOD  # fold: % 10 == 0; probe: % 10 == 5
-_SETSIM_ROLL_READY: set[tuple[str, str, bool]] = set()
-_SETSIM_ROLL_SIDECARS: set[str] = set()
 
 
 def _setsim_roll_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
@@ -3430,82 +3213,44 @@ def _setsim_roll_tables(sf_dir: str, hash_tokens: bool) -> dict[str, str]:
     }
 
 
-def _setsim_roll_payloads(
-    spark: SparkSession,
-    sf_dir: str,
-    hash_tokens: bool,
-    tables: dict[str, str],
-) -> tuple[dict, dict]:
-    """(base-state, rolled-state) sidecar payloads.  Both carry every
-    build parameter plus the covered-block row counts (cheap parquet
-    metadata counts), so a parameter change OR a snapshot change makes
-    both states unadoptable and forces the full rebuild."""
-    docs = table(spark, sf_dir, "documents")
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        ).count(),
-        "hash_tokens": hash_tokens,
-        "n_buckets": SETSIM_INDEX_BUCKETS,
-        "tau": [SETSIM_TAU_NUM, SETSIM_TAU_DEN],
-        "inc_mod": SETSIM_INC_MOD,
-        "roll_mod": SETSIM_ROLL_MOD,
-        "prefix_cols": ["rb", "tok", "nb", "pos"],
-        "sf_dir": sf_dir,
-        "tables": sorted(tables.values()),
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % SETSIM_ROLL_MOD == 0
-    ).count()
-    return base, rolled
-
-
 def _setsim_roll_sidecar_name(sf_dir: str, hash_tokens: bool) -> str:
-    from smile_spark.sources.bucketed import bucket_table_name
+    return _setsim_sidecar_name("roll", sf_dir, hash_tokens)
 
-    return bucket_table_name(
-        f"setsim_roll_{'h1' if hash_tokens else 'h0'}", sf_dir
+
+def _setsim_roll_spec(spark: SparkSession, sf_dir: str) -> dict:
+    """The setsim roll artifact's lifecycle arguments, shared by
+    :func:`setsim_index_rollforward` and the restore-base device.
+    Every build parameter and the covered-block row count is in the
+    payload, so a parameter OR snapshot change forces the full
+    rebuild."""
+    hash_tokens = _setsim_hash_conf(spark)
+    tables = _setsim_roll_tables(sf_dir, hash_tokens)
+    return dict(
+        family="setsim_roll",
+        name=_setsim_roll_sidecar_name(sf_dir, hash_tokens),
+        tables=list(tables.values()),
+        payload=lambda: {
+            **_setsim_payload(spark, sf_dir, hash_tokens, tables),
+            "roll_mod": SETSIM_ROLL_MOD,
+        },
+        write_base=lambda: _setsim_index_write(
+            spark, _setsim_base_docs(spark, sf_dir), tables, hash_tokens
+        ),
     )
 
 
 def clear_setsim_roll_cache() -> None:
-    """Forget the roll-forward memo AND drop this process' adoption
-    sidecars (built or adopted — the IVF contract), so the next call
-    runs the full base-rebuild + fold path.  Tables overwrite in
-    place; nothing to unpersist."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SETSIM_ROLL_READY.clear()
-    for path in list(_SETSIM_ROLL_SIDECARS):
-        remove_sidecar_file(path)
-        _SETSIM_ROLL_SIDECARS.discard(path)
+    """Clear the setsim roll (bench cold ``setsim_rollforward``)."""
+    BK.clear("setsim_roll")
 
 
 def setsim_roll_restore_base(spark: SparkSession, sf_dir: str) -> None:
-    """Force the roll tables back to the pre-fold BASE state (drop +
-    corpus-linear rebuild + base sidecar) — the bench/test device for
-    pricing the FOLD alone: a fold is a one-way append, so re-timing
-    it cold requires restoring the state it consumes.  Production
-    never calls this; the nightly job folds each increment once."""
-    from smile_spark.sources.bucketed import write_sidecar
-
-    hash_tokens = _setsim_hash_conf(spark)
-    tables = _setsim_roll_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    _SETSIM_ROLL_READY.discard(key)
-    base_docs = table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % SETSIM_INC_MOD != 0
-    )
-    _setsim_index_write(spark, base_docs, tables, hash_tokens)
-    pb, _ = _setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
-    _SETSIM_ROLL_SIDECARS.add(
-        write_sidecar(
-            spark, _setsim_roll_sidecar_name(sf_dir, hash_tokens), pb
-        )
-    )
+    """Force the roll tables back to the pre-fold BASE state — the
+    bench/test device for pricing the FOLD alone: a fold is a one-way
+    append, so re-timing it cold requires restoring the state it
+    consumes.  Production never calls this; the nightly job folds
+    each increment once."""
+    BK.restore_base(spark, **_setsim_roll_spec(spark, sf_dir))
 
 
 def _setsim_fold_append(
@@ -3517,20 +3262,12 @@ def _setsim_fold_append(
     """Append the fold block's collapse/membership/prefix rows to the
     persisted roll tables — the increment-linear nightly step.  The
     df table is NOT touched: it is the frozen total order (see the
-    section comment).  On ANY append failure the tables are dropped
-    and the sidecar removed, so a half-appended index is never
-    adoptable (the crash-window analogue of sidecar-after-write; a
-    transactional table format would make append+fingerprint atomic)."""
+    section comment).  The fold of a :func:`bucketed.roll`: the
+    primitive drops the tables when an append fails."""
     from pyspark.sql.window import Window
 
     from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-    )
+    from smile_spark.sources.bucketed import append_bucketed, read_bucketed
 
     fold = table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % SETSIM_ROLL_MOD == 0
@@ -3583,34 +3320,21 @@ def _setsim_fold_append(
         prefix = ranked.filter(
             F.col("pos") <= F.col("nb") - ceil_tau_n + 1
         ).select(F.col("doc_id").alias("rb"), "tok", "nb", "pos")
-        try:
-            append_bucketed(
-                prefix,
-                tables["prefix"],
-                "tok",
-                n_buckets=SETSIM_INDEX_BUCKETS,
-            )
-            append_bucketed(
-                reps.select("rb", "ts", "nb"),
-                tables["reps"],
-                "rb",
-                n_buckets=SETSIM_INDEX_BUCKETS,
-            )
-            append_bucketed(
-                membership.select("rb", "b"),
-                tables["members"],
-                "rb",
-                n_buckets=SETSIM_INDEX_BUCKETS,
-            )
-        except Exception:
-            for tbl in tables.values():
-                drop_bucketed_table(spark, tbl)
-            scpath = sidecar_path(
-                spark, _setsim_roll_sidecar_name(sf_dir, hash_tokens)
-            )
-            remove_sidecar_file(scpath)
-            _SETSIM_ROLL_SIDECARS.discard(scpath)
-            raise
+        append_bucketed(
+            prefix, tables["prefix"], "tok", n_buckets=SETSIM_INDEX_BUCKETS
+        )
+        append_bucketed(
+            reps.select("rb", "ts", "nb"),
+            tables["reps"],
+            "rb",
+            n_buckets=SETSIM_INDEX_BUCKETS,
+        )
+        append_bucketed(
+            membership.select("rb", "b"),
+            tables["members"],
+            "rb",
+            n_buckets=SETSIM_INDEX_BUCKETS,
+        )
     finally:
         # membership may not exist if its checkpoint threw
         try:
@@ -3627,56 +3351,19 @@ def setsim_index_rollforward(
     collapse/membership/prefix rows and updating the sidecar — the
     nightly job's increment-linear form (VERDICT r13 next-round #3),
     replacing the drop-and-rebuild that made every snapshot change
-    corpus-linear.
-
-    Three-state resolution per (application, sf_dir, token-hash):
-    1. a ROLLED sidecar over live tables → adopt (nothing to do);
-    2. a BASE sidecar over live tables → fold (increment-linear);
-    3. anything else (no sidecar, stale snapshot, CHANGED PARAMETERS)
-       → full corpus-linear base rebuild, then fold.
-    Parameter changes land in state 3 by construction — every build
-    parameter is in both payloads, so no rolled index built under
-    other parameters can ever be adopted (the stale-params test pins
-    this).  The single-writer assumption of the setsim index family
-    applies unchanged."""
-    from smile_spark.sources.bucketed import (
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_sidecar,
-    )
-
+    corpus-linear.  A :func:`bucketed.roll` artifact: adopt rolled →
+    fold over base → full rebuild then fold; every build parameter is
+    in the payload, so a parameter change always rebuilds."""
     hash_tokens = _setsim_hash_conf(spark)
     tables = _setsim_roll_tables(sf_dir, hash_tokens)
-    key = (spark.sparkContext.applicationId, sf_dir, hash_tokens)
-    if key in _SETSIM_ROLL_READY:
-        return tables
-    name = _setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    pb, pr = _setsim_roll_payloads(spark, sf_dir, hash_tokens, tables)
-    if sidecar_adoptable(spark, name, pr, list(tables.values())):
-        _SETSIM_ROLL_SIDECARS.add(sidecar_path(spark, name))
-        _SETSIM_ROLL_READY.add(key)
-        return tables
-    if not sidecar_adoptable(spark, name, pb, list(tables.values())):
-        base_docs = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % SETSIM_INC_MOD != 0
-        )
-        _setsim_index_write(spark, base_docs, tables, hash_tokens)
-        _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pb))
-    # Crash contract (ADVICE r14): no adoptable sidecar may exist while
-    # fold appends run — a hard crash between an append and the rolled
-    # write would otherwise leave the BASE sidecar adoptable over
-    # already-folded tables, and the next session would fold AGAIN
-    # (silent prefix/reps/members duplication).  Remove the sidecar
-    # BEFORE the first append (the label_compact remove-first/
-    # rewrite-last ordering), so any crash inside the fold lands in the
-    # full-rebuild arm.
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _SETSIM_ROLL_SIDECARS.discard(scpath)
-    _setsim_fold_append(spark, sf_dir, hash_tokens, tables)
-    _SETSIM_ROLL_SIDECARS.add(write_sidecar(spark, name, pr))
-    _SETSIM_ROLL_READY.add(key)
+    BK.roll(
+        spark,
+        **_setsim_roll_spec(spark, sf_dir),
+        fold_rows=lambda: table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % SETSIM_ROLL_MOD == 0)
+        .count(),
+        fold=lambda: _setsim_fold_append(spark, sf_dir, hash_tokens, tables),
+    )
     return tables
 
 
@@ -3784,18 +3471,10 @@ def dedup_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet row-count metadata makes this a cheap driver-side probe
     mod = _dedup_eval_mod(all_docs.count())
     docs = all_docs.filter(F.col("doc_id") % mod == 0)
-    # 64-bit shingle keys for the all-pairs truth join (r16): the
-    # equi-join and the per-pair intersection counts are identical
-    # under any injective rekeying, and 8-byte longs shuffle/compare
-    # far cheaper than 12-char strings (the r10 setsim token-hash
-    # device; a collision would fail this entry's string-semantics
-    # oracle rather than ship silently).  Measured 2.13 -> 1.67 s for
-    # the truth join at sf0.1.
-    sh = (
-        _shingles(docs)
-        .select("doc_id", F.xxhash64("sh").alias("sh"))
-        .localCheckpoint()
-    )
+    # the truth join keys on the shingle STRING: this is the exact
+    # ground truth, so it must not depend on a hash being
+    # collision-free (a colliding key would inflate the intersection)
+    sh = _shingles(docs).localCheckpoint()
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh.select(F.col("doc_id").alias("a"), "sh")
     sb = sh.select(F.col("doc_id").alias("b"), "sh")
@@ -4649,9 +4328,7 @@ def _text_label_rung() -> "object":
 
 
 def clear_text_label_cache() -> None:
-    """Forget the text label-state memos AND drop this process'
-    adoption sidecars, restoring the cold build/fold paths (bench
-    entries ``text_label_build`` / ``text_labelroll``)."""
+    """Clear the text label state (bench ``text_label_build``)."""
     from smile_spark.operators import labels as L
 
     L.clear_label_state(_text_label_rung())
@@ -4793,11 +4470,7 @@ def text_clusters_incremental_sql() -> str:
 # never change; the daily fold appends one verdict row per increment
 # vector, judged against BASE cluster-mates only (increment-internal
 # duplicates are the next nightly rebuild's input — the family
-# convention).  Three-state sidecar contract + the ADVICE-r14 crash
-# ordering (remove before append, write rolled last) as everywhere.
-
-_SEM_LABEL_READY: set[tuple[str, str]] = set()
-_SEM_LABEL_SIDECARS: set[str] = set()
+# convention).  A bucketed.roll artifact like every other roll.
 
 
 def _sem_label_table(sf_dir: str) -> str:
@@ -4806,44 +4479,59 @@ def _sem_label_table(sf_dir: str) -> str:
     return bucket_table_name("sem_labelroll", sf_dir)
 
 
-def _sem_label_payloads(
-    spark: SparkSession, sf_dir: str, tbl: str
-) -> tuple[dict, dict]:
+def _sem_label_verdicts_write(
+    spark: SparkSession, sf_dir: str, append: bool = False
+) -> None:
+    """Write the base verdicts (or append the increment's) to the
+    bucketed verdict table."""
+    tbl = _sem_label_table(sf_dir)
+    if append:
+        BK.append_bucketed(
+            _sem_fold_verdicts(spark, sf_dir),
+            tbl,
+            "vec_id",
+            n_buckets=SEM_INDEX_BUCKETS,
+        )
+        return
+    BK.drop_bucketed_table(spark, tbl)
+    BK.write_bucketed(
+        _sem_base_verdicts(spark, sf_dir),
+        tbl,
+        "vec_id",
+        n_buckets=SEM_INDEX_BUCKETS,
+    )
+
+
+def _sem_label_spec(spark: SparkSession, sf_dir: str) -> dict:
+    """The semantic verdict roll's lifecycle arguments, shared by
+    :func:`semantic_label_rollforward` and the restore-base device."""
     from smile_spark.operators.similarity import CENTROID_MOD, _vectors
 
-    vecs = _vectors(spark, sf_dir)
-    base = {
-        "state": "base",
-        "base_rows": vecs.filter(
-            F.col("vec_id") % SEM_INC_MOD != 0
-        ).count(),
-        "op": "semantic_labels",
-        "centroid_rule": "base-block-subsample",
-        "centroid_mod": CENTROID_MOD,
-        "inc_mod": SEM_INC_MOD,
-        "tau": SEMDEDUP_TAU,
-        "n_buckets": SEM_INDEX_BUCKETS,
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = vecs.filter(
-        F.col("vec_id") % SEM_INC_MOD == 0
-    ).count()
-    return base, rolled
+    tbl = _sem_label_table(sf_dir)
+    return dict(
+        family="semantic_labels",
+        name=tbl,
+        tables=[tbl],
+        payload=lambda: {
+            "base_rows": _vectors(spark, sf_dir)
+            .filter(F.col("vec_id") % SEM_INC_MOD != 0)
+            .count(),
+            "op": "semantic_labels",
+            "centroid_rule": "base-block-subsample",
+            "centroid_mod": CENTROID_MOD,
+            "inc_mod": SEM_INC_MOD,
+            "tau": SEMDEDUP_TAU,
+            "n_buckets": SEM_INDEX_BUCKETS,
+            "sf_dir": sf_dir,
+            "tables": [tbl],
+        },
+        write_base=lambda: _sem_label_verdicts_write(spark, sf_dir),
+    )
 
 
 def clear_semantic_label_cache() -> None:
-    """Forget the semantic label-state memo AND drop this process'
-    adoption sidecars, restoring the cold build/fold paths (bench
-    entry ``semantic_labelroll``)."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _SEM_LABEL_READY.clear()
-    for path in list(_SEM_LABEL_SIDECARS):
-        remove_sidecar_file(path)
-        _SEM_LABEL_SIDECARS.discard(path)
+    """Clear the SemDeDup verdict roll (bench ``semantic_labelroll``)."""
+    BK.clear("semantic_labels")
 
 
 def _sem_base_verdicts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4930,25 +4618,7 @@ def semantic_label_restore_base(
 ) -> None:
     """Bench/test device: force the verdict table back to the pre-fold
     BASE state so the next roll-forward performs the fold alone."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _sem_label_table(sf_dir)
-    _SEM_LABEL_READY.discard(
-        (spark.sparkContext.applicationId, sf_dir)
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _sem_base_verdicts(spark, sf_dir),
-        tbl,
-        "vec_id",
-        n_buckets=SEM_INDEX_BUCKETS,
-    )
-    pb, _ = _sem_label_payloads(spark, sf_dir, tbl)
-    _SEM_LABEL_SIDECARS.add(write_sidecar(spark, tbl, pb))
+    BK.restore_base(spark, **_sem_label_spec(spark, sf_dir))
 
 
 def semantic_label_rollforward(
@@ -4957,51 +4627,18 @@ def semantic_label_rollforward(
     """Advance the persisted SemDeDup verdict state from covering the
     BASE block to base ∪ increment by appending the increment's
     frozen-model verdicts — the nightly keep/drop maintenance in
-    increment-linear form (the three-state contract; crash ordering:
-    sidecar removed before the append, rolled written last)."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
+    increment-linear form (a :func:`bucketed.roll` artifact)."""
+    from smile_spark.operators.similarity import _vectors
 
-    tbl = _sem_label_table(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEM_LABEL_READY:
-        return tbl
-    pb, pr = _sem_label_payloads(spark, sf_dir, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _SEM_LABEL_SIDECARS.add(sidecar_path(spark, tbl))
-        _SEM_LABEL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _sem_base_verdicts(spark, sf_dir),
-            tbl,
-            "vec_id",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _SEM_LABEL_SIDECARS.discard(scpath)
-    try:
-        append_bucketed(
-            _sem_fold_verdicts(spark, sf_dir),
-            tbl,
-            "vec_id",
-            n_buckets=SEM_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        raise
-    _SEM_LABEL_SIDECARS.add(write_sidecar(spark, tbl, pr))
-    _SEM_LABEL_READY.add(key)
-    return tbl
+    BK.roll(
+        spark,
+        **_sem_label_spec(spark, sf_dir),
+        fold_rows=lambda: _vectors(spark, sf_dir)
+        .filter(F.col("vec_id") % SEM_INC_MOD == 0)
+        .count(),
+        fold=lambda: _sem_label_verdicts_write(spark, sf_dir, append=True),
+    )
+    return _sem_label_table(sf_dir)
 
 
 def semantic_labels_rolled(

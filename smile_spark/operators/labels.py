@@ -12,10 +12,9 @@ corpus-linear nightly input), how to produce its increment-incident
 pair set (the increment-linear daily input), which doc ids count as
 "today's increment", and the parameter payload that invalidates
 persisted state.  Everything else — cc labels over the base graph,
-the collapsed-supernode fold, the base+delta reader, compaction, the
-sidecar adoption contract, and the ADVICE-r14 crash ordering (remove
-the sidecar BEFORE the first append, write the rolled state LAST) —
-is shared code below.
+the collapsed-supernode fold, the base+delta reader and compaction —
+is shared code below; adoption, memo, crash ordering and clears are
+the persisted-artifact lifecycle in sources/bucketed.py.
 
 Collapse-correctness argument: a stored base label IS the min doc_id
 of its base component, so min-label cc over the COLLAPSED graph —
@@ -52,15 +51,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-LABEL_STATE_BUCKETS = 16
+from smile_spark.sources import bucketed as BK
 
-# rung name -> (appId, sf_dir) memo / sidecar-path registries.  The
-# single-writer warehouse assumption of the whole persisted-index
-# family applies unchanged (see dedup._setsim_index_tables).
-_RO_READY: set[tuple[str, str, str]] = set()
-_RO_SIDECARS: dict[str, set[str]] = {}
-_ROLL_READY: set[tuple[str, str, str]] = set()
-_ROLL_SIDECARS: dict[str, set[str]] = {}
+LABEL_STATE_BUCKETS = 16
 
 
 @dataclass(frozen=True)
@@ -98,9 +91,15 @@ class LabelRung:
     base_labels: Callable[[SparkSession, str], DataFrame] | None = None
 
 
-def _registries(rung: LabelRung) -> None:
-    _RO_SIDECARS.setdefault(rung.name, set())
-    _ROLL_SIDECARS.setdefault(rung.name, set())
+def ro_family(rung: LabelRung) -> str:
+    """Lifecycle family (and sidecar ``op``) of the read-only base
+    label table."""
+    return f"{rung.name}_labels"
+
+
+def roll_family(rung: LabelRung) -> str:
+    """Lifecycle family (and sidecar ``op``) of the delta-log roll."""
+    return f"{rung.name}_labelroll"
 
 
 def _ro_table(rung: LabelRung, sf_dir: str) -> str:
@@ -144,49 +143,37 @@ def _payload(
     return p
 
 
-def _roll_payloads(
-    spark: SparkSession, sf_dir: str, rung: LabelRung
-) -> tuple[dict, dict]:
-    tables = roll_tables(rung, sf_dir)
-    base = _payload(
-        spark,
-        sf_dir,
-        rung,
-        f"{rung.name}_labelroll",
-        list(tables.values()),
+def _roll_spec(spark: SparkSession, sf_dir: str, rung: LabelRung) -> dict:
+    """The roll state's lifecycle arguments, shared by
+    :func:`label_rollforward`, :func:`roll_restore_base` and
+    :func:`label_compact`."""
+    tables = list(roll_tables(rung, sf_dir).values())
+    return dict(
+        family=roll_family(rung),
+        name=_roll_sidecar_name(rung, sf_dir),
+        tables=tables,
+        payload=lambda: _payload(
+            spark, sf_dir, rung, roll_family(rung), tables
+        ),
+        write_base=lambda: _roll_base_write(spark, sf_dir, rung),
     )
-    base["state"] = "base"
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = rung.fold_count(spark, sf_dir)
-    return base, rolled
 
 
 def clear_label_state(rung: LabelRung, which: str = "all") -> None:
-    """Forget this rung's memos AND drop this process' adoption
-    sidecars (built or adopted — the IVF contract), so the next call
-    runs the cold build/fold paths (bench pricing).  ``which`` scopes
-    the clear: "ro" (the read-only base label table), "roll" (the
-    delta-log roll state), or "all" — the bench's roll-fold loop must
-    clear ONLY the roll, or it would force the registered live-fold
-    entries to rebuild the read-only table inside their timed pass."""
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    _registries(rung)
-    targets = {
-        "ro": [(_RO_READY, _RO_SIDECARS[rung.name])],
-        "roll": [(_ROLL_READY, _ROLL_SIDECARS[rung.name])],
-        "all": [
-            (_RO_READY, _RO_SIDECARS[rung.name]),
-            (_ROLL_READY, _ROLL_SIDECARS[rung.name]),
-        ],
+    """Clear this rung's lifecycle families (memo and sidecars), so
+    the next call runs the cold build/fold paths (bench pricing).
+    ``which`` scopes the clear: "ro" (the read-only base label table),
+    "roll" (the delta-log roll state), or "all" — the bench's
+    roll-fold loop must clear ONLY the roll, or it would force the
+    registered live-fold entries to rebuild the read-only table inside
+    their timed pass."""
+    families = {
+        "ro": [ro_family(rung)],
+        "roll": [roll_family(rung)],
+        "all": [ro_family(rung), roll_family(rung)],
     }[which]
-    for ready, sidecars in targets:
-        for key in [k for k in ready if k[2] == rung.name]:
-            ready.discard(key)
-        for path in list(sidecars):
-            remove_sidecar_file(path)
-            sidecars.discard(path)
+    for family in families:
+        BK.clear(family)
 
 
 def _with_base_labels(
@@ -232,33 +219,21 @@ def label_index_build(
 ) -> str:
     """Persist the rung's READ-ONLY base label table (id, component)
     bucketed by id — the nightly clustering job the live incremental
-    fold reads.  Standard sidecar-adoption contract."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    _registries(rung)
+    fold reads (a :func:`bucketed.ensure` artifact)."""
     tbl = _ro_table(rung, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    if key in _RO_READY:
-        return tbl
-    expected = _payload(spark, sf_dir, rung, f"{rung.name}_labels", [tbl])
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        _RO_SIDECARS[rung.name].add(sidecar_path(spark, tbl))
-        _RO_READY.add(key)
-        return tbl
 
     def sink(labels: DataFrame) -> None:
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(labels, tbl, "id", n_buckets=LABEL_STATE_BUCKETS)
-        _RO_SIDECARS[rung.name].add(write_sidecar(spark, tbl, expected))
+        BK.drop_bucketed_table(spark, tbl)
+        BK.write_bucketed(labels, tbl, "id", n_buckets=LABEL_STATE_BUCKETS)
 
-    _with_base_labels(spark, sf_dir, rung, sink)
-    _RO_READY.add(key)
+    BK.ensure(
+        spark,
+        ro_family(rung),
+        tbl,
+        [tbl],
+        lambda: _payload(spark, sf_dir, rung, ro_family(rung), [tbl]),
+        lambda: _with_base_labels(spark, sf_dir, rung, sink),
+    )
     return tbl
 
 
@@ -470,35 +445,18 @@ def roll_restore_base(
     spark: SparkSession, sf_dir: str, rung: LabelRung
 ) -> None:
     """Bench/test device: force the roll tables back to the pre-fold
-    BASE state (drop + corpus-linear rebuild + base sidecar) so the
-    next roll-forward performs the fold alone.  Production never
-    calls this."""
-    from smile_spark.sources.bucketed import write_sidecar
-
-    _registries(rung)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    _ROLL_READY.discard(key)
-    _roll_base_write(spark, sf_dir, rung)
-    pb, _ = _roll_payloads(spark, sf_dir, rung)
-    _ROLL_SIDECARS[rung.name].add(
-        write_sidecar(spark, _roll_sidecar_name(rung, sf_dir), pb)
-    )
+    BASE state so the next roll-forward performs the fold alone."""
+    BK.restore_base(spark, **_roll_spec(spark, sf_dir, rung))
 
 
 def _roll_fold(
     spark: SparkSession, sf_dir: str, rung: LabelRung
 ) -> None:
     """Append the day's merged labels as DELTA rows — the
-    increment-linear nightly step.  On an in-process append failure
-    the tables are dropped (the sidecar is ALREADY gone: the caller
-    removed it before invoking, the ADVICE-r14 crash ordering), so no
-    half-appended state ever adopts."""
+    increment-linear nightly step (the fold of a
+    :func:`bucketed.roll`)."""
     from smile_spark.session import unpersist_checkpoint
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        read_bucketed,
-    )
+    from smile_spark.sources.bucketed import append_bucketed, read_bucketed
 
     tables = roll_tables(rung, sf_dir)
     labels = read_bucketed(spark, tables["labels"])
@@ -507,17 +465,9 @@ def _roll_fold(
     del inc_src
     delta, ckpts = _fold_delta(spark, rung, inc, labels)
     try:
-        try:
-            append_bucketed(
-                delta,
-                tables["delta"],
-                "id",
-                n_buckets=LABEL_STATE_BUCKETS,
-            )
-        except Exception:
-            for t in tables.values():
-                drop_bucketed_table(spark, t)
-            raise
+        append_bucketed(
+            delta, tables["delta"], "id", n_buckets=LABEL_STATE_BUCKETS
+        )
     finally:
         for c in [*ckpts, inc]:
             unpersist_checkpoint(c)
@@ -528,41 +478,15 @@ def label_rollforward(
 ) -> dict[str, str]:
     """Advance the rung's persisted LABEL state from covering the BASE
     block to covering base ∪ increment by appending a delta of merged
-    labels.  Three-state contract per (application, sf_dir, rung):
-    adopt rolled → fold over base → full rebuild then fold; every
-    parameter lives in both sidecar payloads, so parameter changes
-    always land in the rebuild arm.  Crash contract (ADVICE r14): the
-    sidecar is removed BEFORE the first append and the rolled sidecar
-    written LAST, so a process crash anywhere inside the fold leaves
-    no adoptable state — a second fold (silent delta duplication) is
-    structurally impossible."""
-    from smile_spark.sources.bucketed import (
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_sidecar,
+    labels — a :func:`bucketed.roll` artifact (adopt rolled → fold
+    over base → full rebuild then fold)."""
+    BK.roll(
+        spark,
+        **_roll_spec(spark, sf_dir, rung),
+        fold_rows=lambda: rung.fold_count(spark, sf_dir),
+        fold=lambda: _roll_fold(spark, sf_dir, rung),
     )
-
-    _registries(rung)
-    tables = roll_tables(rung, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, rung.name)
-    if key in _ROLL_READY:
-        return tables
-    name = _roll_sidecar_name(rung, sf_dir)
-    pb, pr = _roll_payloads(spark, sf_dir, rung)
-    if sidecar_adoptable(spark, name, pr, list(tables.values())):
-        _ROLL_SIDECARS[rung.name].add(sidecar_path(spark, name))
-        _ROLL_READY.add(key)
-        return tables
-    if not sidecar_adoptable(spark, name, pb, list(tables.values())):
-        _roll_base_write(spark, sf_dir, rung)
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _ROLL_SIDECARS[rung.name].discard(scpath)
-    _roll_fold(spark, sf_dir, rung)
-    _ROLL_SIDECARS[rung.name].add(write_sidecar(spark, name, pr))
-    _ROLL_READY.add(key)
-    return tables
+    return roll_tables(rung, sf_dir)
 
 
 def rolled_label_state(
@@ -611,41 +535,39 @@ def label_compact(
     """LSM-style compaction: rewrite the base label table as the
     EFFECTIVE rolled state and truncate the delta — amortized
     corpus-linear.  Readers see an identical state before and after.
-    Crash contract: sidecar removed FIRST, rewritten LAST, so a crash
-    anywhere inside leaves no adoptable state.  The rewrite goes
-    through a temp table + catalog RENAME (a filesystem move for
-    managed parquet tables)."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        read_bucketed,
-        remove_sidecar_file,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    _registries(rung)
+    Runs as an unsealed :func:`bucketed.rewrite` of the rolled state.
+    The rewrite goes through a temp table + catalog RENAME (a
+    filesystem move for managed parquet tables)."""
     tables = label_rollforward(spark, sf_dir, rung)
-    name = _roll_sidecar_name(rung, sf_dir)
-    _, pr = _roll_payloads(spark, sf_dir, rung)
+    spec = _roll_spec(spark, sf_dir, rung)
+    rolled = {
+        **spec["payload"](),
+        "state": "rolled",
+        "fold_rows": rung.fold_count(spark, sf_dir),
+    }
     eff = rolled_label_state(spark, sf_dir, rung)
     # schema-only: an overwrite whose plan READS the target table is
     # rejected by Spark, so the empty delta is built from the schema
     empty_delta = spark.createDataFrame(
-        [], read_bucketed(spark, tables["delta"]).schema
+        [], BK.read_bucketed(spark, tables["delta"]).schema
     )
-    scpath = sidecar_path(spark, name)
-    remove_sidecar_file(scpath)
-    _ROLL_SIDECARS[rung.name].discard(scpath)
-    tmp = f"{tables['labels']}_cmp"
-    drop_bucketed_table(spark, tmp)
-    write_bucketed(eff, tmp, "id", n_buckets=LABEL_STATE_BUCKETS)
-    drop_bucketed_table(spark, tables["labels"])
-    spark.sql(f"ALTER TABLE {tmp} RENAME TO {tables['labels']}")
-    write_bucketed(
-        empty_delta, tables["delta"], "id", n_buckets=LABEL_STATE_BUCKETS
+
+    def compact() -> None:
+        tmp = f"{tables['labels']}_cmp"
+        BK.drop_bucketed_table(spark, tmp)
+        BK.write_bucketed(eff, tmp, "id", n_buckets=LABEL_STATE_BUCKETS)
+        BK.drop_bucketed_table(spark, tables["labels"])
+        spark.sql(f"ALTER TABLE {tmp} RENAME TO {tables['labels']}")
+        BK.write_bucketed(
+            empty_delta,
+            tables["delta"],
+            "id",
+            n_buckets=LABEL_STATE_BUCKETS,
+        )
+
+    BK.rewrite(
+        spark, spec["family"], spec["name"], spec["tables"], rolled, compact
     )
-    _ROLL_SIDECARS[rung.name].add(write_sidecar(spark, name, pr))
     return tables
 
 

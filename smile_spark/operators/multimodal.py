@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from smile_spark.operators import labels as L
 from smile_spark.operators.labels import keep_list_sql
+from smile_spark.sources import bucketed as BK
 from smile_spark.tables import table
 
 # --- real numpy codecs ----------------------------------------------------
@@ -1698,13 +1699,6 @@ IMAGE_DHASH_CLUSTERS_SQL = keep_list_sql(
 # decode + banding for its OWN documents only.
 DHASH_INC_MOD = 5
 DHASH_INDEX_BUCKETS = 16
-# (applicationId, sf_dir, modality) -> index table is ready
-_BAND_INDEX_READY: set[tuple[str, str, str]] = set()
-_BAND_INDEX_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
 # modality -> (subset mod, subset residue, table base).  Image/audio
 # subsets are the modality thirds (doc_id % 3); video's tolerant rung
 # lives on the HI-RES subset (doc_id % HIRES_MOD == 2, every second
@@ -1717,6 +1711,14 @@ _BAND_MODALITY = {
     "image": (3, 0, "dhash_idx_bands"),
     "audio": (3, 1, "audio_idx_bands"),
     "video": (HIRES_MOD, 2, "video_idx_bands"),
+}
+# image/audio payloads are byte-identical to pre-video builds so
+# existing warehouse sidecars keep adopting; the video payload records
+# the hi-res dHash grid plus the per-video frame count
+_BAND_GRIDS = {
+    "image": [DHASH_GW, DHASH_GH],
+    "audio": [AUD_FP_GRID],
+    "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
 }
 
 
@@ -1745,36 +1747,61 @@ def _band_index_table(sf_dir: str, modality: str) -> str:
     return bucket_table_name(_BAND_MODALITY[modality][2], sf_dir)
 
 
-def _clear_band_index(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
+def _band_payload(
+    spark: SparkSession, sf_dir: str, modality: str, tbl: str
+) -> dict:
+    """Sidecar payload of a band index: every build parameter plus the
+    base-block row count of the modality's subset."""
+    from smile_spark.tables import table as _table
 
-    for key in [k for k in _BAND_INDEX_READY if k[2] == modality]:
-        _BAND_INDEX_READY.discard(key)
-    sidecars = _BAND_INDEX_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
+    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
+    base_pred = (F.col("doc_id") % sub_mod == sub_res) & (
+        F.col("doc_id") % DHASH_INC_MOD != 0
+    )
+    return {
+        "base_rows": _table(spark, sf_dir, "documents")
+        .filter(base_pred)
+        .count(),
+        "modality": modality,
+        "inc_mod": DHASH_INC_MOD,
+        "n_buckets": DHASH_INDEX_BUCKETS,
+        "grid": _BAND_GRIDS[modality],
+        "sf_dir": sf_dir,
+        "tables": [tbl],
+    }
+
+
+def _band_write(
+    spark: SparkSession,
+    sf_dir: str,
+    modality: str,
+    tbl: str,
+    pred,
+    append: bool = False,
+) -> None:
+    """Fingerprint the modality's documents matching ``pred`` and
+    write (or append) their band rows to the bucketed table ``tbl``."""
+    rows = _band_rows_from_hashes(_band_frame(spark, sf_dir, modality, pred))
+    if append:
+        BK.append_bucketed(rows, tbl, "bv", n_buckets=DHASH_INDEX_BUCKETS)
+        return
+    BK.drop_bucketed_table(spark, tbl)
+    BK.write_bucketed(rows, tbl, "bv", n_buckets=DHASH_INDEX_BUCKETS)
 
 
 def clear_dhash_index_cache() -> None:
-    """Forget the per-process IMAGE index memo AND drop the adoption
-    sidecars this process wrote, so the next probe (or the bench's
-    cold ``dhash_index_build`` loop) runs the full decode + band +
-    write path instead of adopting the table it just built.  The
-    build overwrites the table in place — nothing to unpersist."""
-    _clear_band_index("image")
+    """Clear the IMAGE band index (bench cold ``dhash_index_build``)."""
+    BK.clear("image_band_index")
 
 
 def clear_audio_index_cache() -> None:
-    """The AUDIO twin of :func:`clear_dhash_index_cache` (bench cold
-    entry ``audio_index_build``)."""
-    _clear_band_index("audio")
+    """Clear the AUDIO band index (bench cold ``audio_index_build``)."""
+    BK.clear("audio_band_index")
 
 
 def clear_video_index_cache() -> None:
-    """The VIDEO twin of :func:`clear_dhash_index_cache` (bench cold
-    entry ``video_index_build``)."""
-    _clear_band_index("video")
+    """Clear the VIDEO band index (bench cold ``video_index_build``)."""
+    BK.clear("video_band_index")
 
 
 def _band_rows_from_hashes(hashes: DataFrame) -> DataFrame:
@@ -1813,67 +1840,24 @@ def _band_index_build(
     At 100 TB this is the nightly job the full-rebuild rungs lack
     (VERDICT r12 What's-missing #1): the corpus pays decode + banding
     ONCE per snapshot, and every daily ingest probes the bucketed
-    band table — the ``setsim_index_build`` contract applied to the
-    perceptual family.  Sidecar adoption is shared with setsim: a
-    fresh session whose memo is empty adopts a matching table instead
-    of rebuilding; stale sidecars rebuild; the cold path stays behind
-    the per-modality cache clears for bench pricing.
+    band table — a :func:`bucketed.ensure` artifact like
+    ``setsim_index_build``.
     """
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        sidecar_adoptable,
-        write_bucketed,
-        write_sidecar,
-    )
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
     tbl = _band_index_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _BAND_INDEX_READY:
-        return tbl
-    base_pred = (F.col("doc_id") % sub_mod == sub_res) & (
-        F.col("doc_id") % DHASH_INC_MOD != 0
+    BK.ensure(
+        spark,
+        f"{modality}_band_index",
+        tbl,
+        [tbl],
+        lambda: _band_payload(spark, sf_dir, modality, tbl),
+        lambda: _band_write(
+            spark,
+            sf_dir,
+            modality,
+            tbl,
+            F.col("doc_id") % DHASH_INC_MOD != 0,
+        ),
     )
-    n_base = (
-        _table(spark, sf_dir, "documents").filter(base_pred).count()
-    )
-    # image/audio payloads are byte-identical to pre-video builds so
-    # existing warehouse sidecars keep adopting; the video payload
-    # records the hi-res dHash grid plus the per-video frame count
-    grids = {
-        "image": [DHASH_GW, DHASH_GH],
-        "audio": [AUD_FP_GRID],
-        "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
-    }
-    expected = {
-        "base_rows": n_base,
-        "modality": modality,
-        "inc_mod": DHASH_INC_MOD,
-        "n_buckets": DHASH_INDEX_BUCKETS,
-        "grid": grids[modality],
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    if sidecar_adoptable(spark, tbl, expected, [tbl]):
-        # track the sidecar whether built OR adopted (the IVF
-        # contract, ADVICE r13 #2) so the per-modality cache clears
-        # always restore the cold decode+band+write path
-        from smile_spark.sources.bucketed import sidecar_path
-
-        _BAND_INDEX_SIDECARS[modality].add(sidecar_path(spark, tbl))
-        _BAND_INDEX_READY.add(key)
-        return tbl
-    hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-    )
-    bands = _band_rows_from_hashes(hashes)
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(bands, tbl, "bv", n_buckets=DHASH_INDEX_BUCKETS)
-    _BAND_INDEX_SIDECARS[modality].add(
-        write_sidecar(spark, tbl, expected)
-    )
-    _BAND_INDEX_READY.add(key)
     return tbl
 
 
@@ -2048,12 +2032,6 @@ def video_dhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # test; image and audio keep non-degenerate probe blocks.
 
 BAND_ROLL_MOD = 2 * DHASH_INC_MOD  # fold: % 10 == 0; probe: % 10 == 5
-_BAND_ROLL_READY: set[tuple[str, str, str]] = set()
-_BAND_ROLL_SIDECARS: dict[str, set[str]] = {
-    "image": set(),
-    "audio": set(),
-    "video": set(),
-}
 
 
 def _band_roll_table(sf_dir: str, modality: str) -> str:
@@ -2064,171 +2042,77 @@ def _band_roll_table(sf_dir: str, modality: str) -> str:
     )
 
 
-def _band_roll_payloads(
-    spark: SparkSession, sf_dir: str, modality: str, tbl: str
-) -> tuple[dict, dict]:
-    """(base-state, rolled-state) sidecar payloads — every build
-    parameter plus covered-block row counts, so parameter AND
+def _band_roll_spec(spark: SparkSession, sf_dir: str, modality: str) -> dict:
+    """A band roll artifact's lifecycle arguments, shared by
+    :func:`band_index_rollforward` and the restore-base device: every
+    build parameter plus covered-block row counts, so parameter AND
     snapshot changes force the full rebuild."""
-    from smile_spark.tables import table as _table
-
-    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
-    docs = _table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") % sub_mod == sub_res
+    tbl = _band_roll_table(sf_dir, modality)
+    return dict(
+        family=f"{modality}_band_roll",
+        name=tbl,
+        tables=[tbl],
+        payload=lambda: {
+            **_band_payload(spark, sf_dir, modality, tbl),
+            "roll_mod": BAND_ROLL_MOD,
+        },
+        write_base=lambda: _band_write(
+            spark,
+            sf_dir,
+            modality,
+            tbl,
+            F.col("doc_id") % DHASH_INC_MOD != 0,
+        ),
     )
-    grids = {
-        "image": [DHASH_GW, DHASH_GH],
-        "audio": [AUD_FP_GRID],
-        "video": [DHASH_GW, DHASH_GH, VID_FRAMES],
-    }
-    base = {
-        "state": "base",
-        "base_rows": docs.filter(
-            F.col("doc_id") % DHASH_INC_MOD != 0
-        ).count(),
-        "modality": modality,
-        "inc_mod": DHASH_INC_MOD,
-        "roll_mod": BAND_ROLL_MOD,
-        "n_buckets": DHASH_INDEX_BUCKETS,
-        "grid": grids[modality],
-        "sf_dir": sf_dir,
-        "tables": [tbl],
-    }
-    rolled = dict(base)
-    rolled["state"] = "rolled"
-    rolled["fold_rows"] = docs.filter(
-        F.col("doc_id") % BAND_ROLL_MOD == 0
-    ).count()
-    return base, rolled
-
-
-def _clear_band_roll(modality: str) -> None:
-    from smile_spark.sources.bucketed import remove_sidecar_file
-
-    for key in [k for k in _BAND_ROLL_READY if k[2] == modality]:
-        _BAND_ROLL_READY.discard(key)
-    sidecars = _BAND_ROLL_SIDECARS[modality]
-    for path in list(sidecars):
-        remove_sidecar_file(path)
-        sidecars.discard(path)
 
 
 def clear_dhash_roll_cache() -> None:
-    """Forget the IMAGE roll-forward memo AND drop this process'
-    adoption sidecars, so the next call runs the full base-rebuild +
-    fold path (bench cold pricing)."""
-    _clear_band_roll("image")
+    """Clear the IMAGE band roll (bench cold ``dhash_rollforward``)."""
+    BK.clear("image_band_roll")
 
 
 def clear_audio_roll_cache() -> None:
-    """The AUDIO twin of :func:`clear_dhash_roll_cache`."""
-    _clear_band_roll("audio")
+    """Clear the AUDIO band roll."""
+    BK.clear("audio_band_roll")
 
 
 def clear_video_roll_cache() -> None:
-    """The VIDEO twin of :func:`clear_dhash_roll_cache`."""
-    _clear_band_roll("video")
+    """Clear the VIDEO band roll."""
+    BK.clear("video_band_roll")
 
 
 def band_roll_restore_base(
     spark: SparkSession, sf_dir: str, modality: str
 ) -> None:
-    """Force the roll table back to the pre-fold BASE state (drop +
-    corpus-linear rebuild + base sidecar) — the bench/test device for
-    pricing the FOLD alone (a fold is a one-way append).  Production
-    never calls this."""
-    from smile_spark.sources.bucketed import (
-        drop_bucketed_table,
-        write_bucketed,
-        write_sidecar,
-    )
-
-    tbl = _band_roll_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    _BAND_ROLL_READY.discard(key)
-    hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-    )
-    drop_bucketed_table(spark, tbl)
-    write_bucketed(
-        _band_rows_from_hashes(hashes),
-        tbl,
-        "bv",
-        n_buckets=DHASH_INDEX_BUCKETS,
-    )
-    pb, _ = _band_roll_payloads(spark, sf_dir, modality, tbl)
-    _BAND_ROLL_SIDECARS[modality].add(
-        write_sidecar(spark, tbl, pb)
-    )
+    """Force the roll table back to the pre-fold BASE state — the
+    bench/test device for pricing the FOLD alone (a fold is a one-way
+    append).  Production never calls this."""
+    BK.restore_base(spark, **_band_roll_spec(spark, sf_dir, modality))
 
 
 def band_index_rollforward(
     spark: SparkSession, sf_dir: str, modality: str
 ) -> str:
     """Advance the persisted band index from covering the BASE block
-    to base ∪ fold by appending the fold block's band rows and
-    updating the sidecar — the increment-linear nightly step for the
-    perceptual rungs (the setsim_index_rollforward three-state
-    contract: adopt rolled → fold over base → full rebuild then
-    fold).  The fold pays decode + banding for its OWN documents
-    only; a failed append drops the table and sidecar so a
-    half-appended index is never adoptable."""
-    from smile_spark.sources.bucketed import (
-        append_bucketed,
-        drop_bucketed_table,
-        remove_sidecar_file,
-        sidecar_adoptable,
-        sidecar_path,
-        write_bucketed,
-        write_sidecar,
-    )
+    to base ∪ fold by appending the fold block's band rows — the
+    increment-linear nightly step for the perceptual rungs (a
+    :func:`bucketed.roll` artifact).  The fold pays decode + banding
+    for its OWN documents only."""
+    from smile_spark.tables import table as _table
 
+    sub_mod, sub_res, _ = _BAND_MODALITY[modality]
     tbl = _band_roll_table(sf_dir, modality)
-    key = (spark.sparkContext.applicationId, sf_dir, modality)
-    if key in _BAND_ROLL_READY:
-        return tbl
-    pb, pr = _band_roll_payloads(spark, sf_dir, modality, tbl)
-    if sidecar_adoptable(spark, tbl, pr, [tbl]):
-        _BAND_ROLL_SIDECARS[modality].add(sidecar_path(spark, tbl))
-        _BAND_ROLL_READY.add(key)
-        return tbl
-    if not sidecar_adoptable(spark, tbl, pb, [tbl]):
-        hashes = _band_frame(
-            spark, sf_dir, modality, F.col("doc_id") % DHASH_INC_MOD != 0
-        )
-        drop_bucketed_table(spark, tbl)
-        write_bucketed(
-            _band_rows_from_hashes(hashes),
-            tbl,
-            "bv",
-            n_buckets=DHASH_INDEX_BUCKETS,
-        )
-        _BAND_ROLL_SIDECARS[modality].add(write_sidecar(spark, tbl, pb))
-    # crash contract (ADVICE r14): remove the sidecar BEFORE the
-    # append so a crash between the append and the rolled write can
-    # never leave a BASE sidecar adoptable over a folded table (a
-    # second fold would silently duplicate band rows)
-    scpath = sidecar_path(spark, tbl)
-    remove_sidecar_file(scpath)
-    _BAND_ROLL_SIDECARS[modality].discard(scpath)
-    fold_hashes = _band_frame(
-        spark, sf_dir, modality, F.col("doc_id") % BAND_ROLL_MOD == 0
+    fold_pred = F.col("doc_id") % BAND_ROLL_MOD == 0
+    BK.roll(
+        spark,
+        **_band_roll_spec(spark, sf_dir, modality),
+        fold_rows=lambda: _table(spark, sf_dir, "documents")
+        .filter((F.col("doc_id") % sub_mod == sub_res) & fold_pred)
+        .count(),
+        fold=lambda: _band_write(
+            spark, sf_dir, modality, tbl, fold_pred, append=True
+        ),
     )
-    try:
-        append_bucketed(
-            _band_rows_from_hashes(fold_hashes),
-            tbl,
-            "bv",
-            n_buckets=DHASH_INDEX_BUCKETS,
-        )
-    except Exception:
-        drop_bucketed_table(spark, tbl)
-        scpath = sidecar_path(spark, tbl)
-        remove_sidecar_file(scpath)
-        _BAND_ROLL_SIDECARS[modality].discard(scpath)
-        raise
-    _BAND_ROLL_SIDECARS[modality].add(write_sidecar(spark, tbl, pr))
-    _BAND_ROLL_READY.add(key)
     return tbl
 
 

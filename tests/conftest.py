@@ -19,3 +19,26 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def forget_memo(family: str) -> None:
+    """Simulate a fresh session for one persisted-artifact family
+    (``sources/bucketed.py``): drop its per-process memo entries and
+    keep the warehouse, the catalog and the sidecars, so the next call
+    takes the adopt / fold / rebuild decision again."""
+    from smile_spark.sources import bucketed as BK
+
+    for key in [k for k in BK._ARTIFACT_READY if k[0] == family]:
+        BK._ARTIFACT_READY.discard(key)
+
+
+def memoized(family: str, sf_dir: str | None = None) -> bool:
+    """True iff ``family`` holds a memo entry in this process (for
+    ``sf_dir``'s artifacts, when given)."""
+    from smile_spark.sources import bucketed as BK
+
+    suffix = BK.bucket_table_name("", sf_dir) if sf_dir else ""
+    return any(
+        k[0] == family and k[2].endswith(suffix)
+        for k in BK._ARTIFACT_READY
+    )

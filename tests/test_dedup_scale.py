@@ -112,3 +112,33 @@ def test_chunk_dedup_16x_duplication_canary(spark, sf_dir, tmp_path):
         # every chunk occurs >= 16 times globally now
         assert r.n_dup_chunks == r.n_chunks, r
         assert r.dup_chunk_pct == 100.0, r
+
+
+def test_exact_shingle_paths_survive_hash_collisions(
+    spark, sf_dir, monkeypatch
+):
+    """dedup_eval's truth join and the LSH exact verify (behind
+    dedup_minhash_incremental) are exact paths: with xxhash64 replaced
+    by a key that collides on every shingle of equal length, both must
+    still return their string-semantics result."""
+    from smile_spark.operators import dedup as D
+
+    def results():
+        D.clear_lsh_cache()
+        return (
+            sorted(tuple(r) for r in D.dedup_eval(spark, sf_dir).collect()),
+            sorted(
+                tuple(r)
+                for r in D.dedup_minhash_incremental(spark, sf_dir).collect()
+            ),
+        )
+
+    want = results()
+    assert want[1], "no incremental pair to verify"
+    monkeypatch.setattr(
+        F, "xxhash64", lambda *cols: F.length(cols[0]).cast("bigint")
+    )
+    got = results()
+    monkeypatch.undo()
+    D.clear_lsh_cache()
+    assert got == want

@@ -6,6 +6,8 @@ import os
 
 import pytest
 
+from conftest import forget_memo
+
 CRASH_POINTS = [
     "fold_append",
     "fold_sidecar",
@@ -104,8 +106,7 @@ def test_label_lifecycle_crash_points(
         ), "a failed fold left half-appended tables behind"
     # recovery in a new session: the full-rebuild arm (labels + empty
     # delta = 2 writes), then exactly one fold append
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    forget_memo(L.roll_family(rung))
     writes, appends = [], []
     monkeypatch.setattr(
         BK,

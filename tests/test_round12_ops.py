@@ -10,6 +10,8 @@ import types
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import memoized
+
 
 # ---------------------------------------------------------------------------
 # scratch-dir lifecycle (VERDICT r11 What's-wrong #4)
@@ -471,14 +473,12 @@ def test_setsim_index_is_built_once_and_rebuilt_on_clear(spark, sf_dir):
     t1 = D.setsim_index_build(spark, sf_dir)
     # warm: same table map, no rebuild (READY key present)
     assert D.setsim_index_build(spark, sf_dir) == t1
-    assert any(
-        k[1] == sf_dir for k in D._SETSIM_INDEX_READY
-    )
+    assert memoized("setsim_index", sf_dir)
     # all four bucketed tables exist in the catalog
     for tbl in t1.values():
         assert spark.catalog.tableExists(tbl), tbl
     D.clear_setsim_index_cache()
-    assert not D._SETSIM_INDEX_READY
+    assert not memoized("setsim_index")
     # a rebuild after clear overwrites in place and works end-to-end
     assert D.setsim_index_build(spark, sf_dir) == t1
 

@@ -8,6 +8,8 @@ import json
 
 import pytest  # noqa: F401
 
+from conftest import forget_memo, memoized
+
 
 # ---------------------------------------------------------------------------
 # Persisted video frame-band index + incremental probe
@@ -70,15 +72,14 @@ def test_video_index_adoption_is_modality_scoped(spark, sf_dir, monkeypatch):
     M.clear_video_index_cache()
     M.dhash_index_build(spark, sf_dir)
     tbl_v = M.video_index_build(spark, sf_dir)
-    app = spark.sparkContext.applicationId
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "video") in M._BAND_INDEX_READY
+    assert memoized("image_band_index", sf_dir)
+    assert memoized("video_band_index", sf_dir)
     M.clear_video_index_cache()
-    assert (app, sf_dir, "image") in M._BAND_INDEX_READY
-    assert (app, sf_dir, "video") not in M._BAND_INDEX_READY
+    assert memoized("image_band_index", sf_dir)
+    assert not memoized("video_band_index", sf_dir)
     # sidecar gone -> full rebuild; then fresh-session adoption
     M.video_index_build(spark, sf_dir)
-    M._BAND_INDEX_READY.discard((app, sf_dir, "video"))
+    forget_memo("video_band_index")
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -142,7 +143,7 @@ def test_semantic_index_adoption_and_stale_sidecar(
     D.clear_semantic_index_cache()
     tbl = D.semantic_index_build(spark, sf_dir)
     # fresh session: only the per-process memo is gone
-    D._SEM_INDEX_READY.clear()
+    forget_memo("semantic_index")
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -161,7 +162,7 @@ def test_semantic_index_adoption_and_stale_sidecar(
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SEM_INDEX_READY.clear()
+    forget_memo("semantic_index")
     assert D.semantic_index_build(spark, sf_dir) == tbl
     assert len(writes) == 1, "stale sidecar must trigger a rebuild"
 

@@ -7,6 +7,8 @@ import pytest  # noqa: F401
 
 from pyspark.sql import functions as F
 
+from conftest import forget_memo
+
 
 # ---------------------------------------------------------------------------
 # setsim_index_rollforward
@@ -66,7 +68,7 @@ def test_setsim_rollforward_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     D.setsim_index_rollforward(spark, sf_dir)
-    D._SETSIM_ROLL_READY.clear()
+    forget_memo("setsim_roll")
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(("write", a))
@@ -109,7 +111,7 @@ def test_setsim_rollforward_stale_params_full_rebuild(
     payload["base_rows"] += 1  # the snapshot "changed"
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    D._SETSIM_ROLL_READY.clear()
+    forget_memo("setsim_roll")
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -129,99 +131,6 @@ def test_setsim_rollforward_stale_params_full_rebuild(
     # the sidecar advanced to the rolled state
     with open(path) as fh:
         assert json.load(fh)["state"] == "rolled"
-
-
-def test_setsim_fold_failure_never_adoptable(spark, sf_dir, monkeypatch):
-    """A crash mid-fold must leave NO adoptable state: the tables are
-    dropped and the sidecar removed, so the next call rebuilds from
-    scratch instead of folding over a half-appended index."""
-    import os
-
-    from smile_spark.operators import dedup as D
-    from smile_spark.sources import bucketed as BK
-
-    D.setsim_roll_restore_base(spark, sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
-    path = BK.sidecar_path(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    )
-    calls = []
-    real_append = BK.append_bucketed
-
-    def flaky_append(*a, **k):
-        calls.append(a)
-        if len(calls) == 2:  # die after the first table appended
-            raise RuntimeError("simulated executor loss mid-fold")
-        return real_append(*a, **k)
-
-    monkeypatch.setattr(BK, "append_bucketed", flaky_append)
-    with pytest.raises(RuntimeError, match="mid-fold"):
-        D.setsim_index_rollforward(spark, sf_dir)
-    assert not os.path.exists(path), (
-        "a failed fold left an adoptable sidecar behind"
-    )
-    tables = D._setsim_roll_tables(sf_dir, hash_tokens)
-    assert not any(
-        spark.catalog.tableExists(t) for t in tables.values()
-    ), "a failed fold left half-appended tables behind"
-    monkeypatch.setattr(BK, "append_bucketed", real_append)
-    # recovery: the next call runs the full rebuild + fold and probes
-    D._SETSIM_ROLL_READY.clear()
-    out = D.setsim_rolled_probe(spark, sf_dir)
-    assert out.count() > 0
-
-
-def test_setsim_crash_after_appends_never_adopts_base(
-    spark, sf_dir, monkeypatch
-):
-    """The ADVICE r14 crash window: a hard crash AFTER the fold
-    appends succeed but BEFORE the rolled sidecar lands must leave no
-    adoptable BASE sidecar — otherwise the next session would adopt
-    base state over already-folded tables and fold AGAIN, silently
-    duplicating prefix/reps/members rows.  The fix removes the sidecar
-    before the first append, so this crash point has no sidecar at
-    all and the next call takes the full-rebuild arm."""
-    import os
-
-    from smile_spark.operators import dedup as D
-    from smile_spark.sources import bucketed as BK
-
-    D.setsim_roll_restore_base(spark, sf_dir)
-    hash_tokens = D._setsim_hash_conf(spark)
-    path = BK.sidecar_path(
-        spark, D._setsim_roll_sidecar_name(sf_dir, hash_tokens)
-    )
-    assert os.path.exists(path)  # the base sidecar restore_base wrote
-    real_write_sidecar = BK.write_sidecar
-
-    def dying_write_sidecar(spark_, name, payload):
-        if payload.get("state") == "rolled":
-            raise RuntimeError("simulated process death pre-sidecar")
-        return real_write_sidecar(spark_, name, payload)
-
-    monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
-    with pytest.raises(RuntimeError, match="pre-sidecar"):
-        D.setsim_index_rollforward(spark, sf_dir)
-    assert not os.path.exists(path), (
-        "a crash between the appends and the rolled-sidecar write"
-        " left an adoptable sidecar behind"
-    )
-    monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    # recovery: with no sidecar the next call lands in the FULL
-    # rebuild arm (4 table writes) — never a second fold over the
-    # already-folded tables
-    D._SETSIM_ROLL_READY.clear()
-    writes = []
-    real_write = BK.write_bucketed
-    monkeypatch.setattr(
-        BK,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a), real_write(*a, **k)),
-    )
-    D.setsim_index_rollforward(spark, sf_dir)
-    assert len(writes) == 4, "recovery must take the full-rebuild arm"
-    out = D.setsim_rolled_probe(spark, sf_dir)
-    assert out.count() > 0
 
 
 # ---------------------------------------------------------------------------
@@ -274,7 +183,7 @@ def test_band_rollforward_stale_params_full_rebuild(
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    M._BAND_ROLL_READY.clear()
+    forget_memo("image_band_roll")
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -301,8 +210,7 @@ def test_band_rollforward_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     M.band_index_rollforward(spark, sf_dir, "image")
-    for key in [k for k in M._BAND_ROLL_READY if k[2] == "image"]:
-        M._BAND_ROLL_READY.discard(key)
+    forget_memo("image_band_roll")
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -384,12 +292,11 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     a rebuild; a stale sidecar forces one."""
     import json
 
-    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
     tbl = M.image_label_index_build(spark, sf_dir)
-    L._RO_READY.clear()
+    forget_memo("image_labels")
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -407,7 +314,7 @@ def test_image_label_index_adoption(spark, sf_dir, monkeypatch):
     payload["base_rows"] += 1
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    L._RO_READY.clear()
+    forget_memo("image_labels")
     writes = []
     real_write = BK.write_bucketed
     monkeypatch.setattr(
@@ -535,8 +442,8 @@ def test_minhash_semantic_rolled_adoption(spark, sf_dir, monkeypatch):
 
     D.minhash_index_rollforward(spark, sf_dir)
     D.semantic_index_rollforward(spark, sf_dir)
-    D._MH_ROLL_READY.clear()
-    D._SEM_ROLL_READY.clear()
+    forget_memo("minhash_roll")
+    forget_memo("semantic_roll")
     jobs = []
     for fn in ("write_bucketed", "append_bucketed", "drop_bucketed_table"):
         monkeypatch.setattr(BK, fn, lambda *a, **k: jobs.append(a))

@@ -10,6 +10,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from conftest import forget_memo
+
 SF001 = "/root/testdata/sf0.01"
 
 
@@ -137,13 +139,11 @@ def test_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
     """A fresh 'session' (memo cleared, warehouse intact) must adopt
     the ROLLED label state without any drop/write/append job, and the
     reader must still serve from the adopted tables."""
-    from smile_spark.operators import labels as L
     from smile_spark.operators import multimodal as M
     from smile_spark.sources import bucketed as BK
 
     M.label_rollforward(spark, sf_dir, "image")
-    for key in [k for k in L._ROLL_READY if k[2] == "image"]:
-        L._ROLL_READY.discard(key)
+    forget_memo("image_labelroll")
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -179,8 +179,7 @@ def test_labelroll_stale_params_full_rebuild(spark, sf_dir, monkeypatch):
     payload["grid"] = [7, 6]  # a PARAMETER changed, not the snapshot
     with open(path, "w") as fh:
         json.dump(payload, fh)
-    for key in [k for k in L._ROLL_READY if k[2] == "image"]:
-        L._ROLL_READY.discard(key)
+    forget_memo("image_labelroll")
     writes, appends = [], []
     real_write = BK.write_bucketed
     real_append = BK.append_bucketed
@@ -221,8 +220,7 @@ def test_label_compact_preserves_state(spark, sf_dir, modality):
     assert before == after, "compaction changed the visible state"
     assert read_bucketed(spark, tables["delta"]).count() == 0
     # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in L._ROLL_READY if k[2] == modality]:
-        L._ROLL_READY.discard(key)
+    forget_memo(f"{modality}_labelroll")
     got = M.label_rollforward(spark, sf_dir, modality)
     assert got == tables
     post = {
@@ -246,8 +244,7 @@ def test_label_compact_policy(spark, sf_dir, modality):
     # restore a freshly-folded state so the policy decision observes
     # a real (possibly empty, for video's tiny increment) delta
     M.labelroll_restore_base(spark, sf_dir, modality)
-    for key in [k for k in L._ROLL_READY if k[2] == modality]:
-        L._ROLL_READY.discard(key)
+    forget_memo(f"{modality}_labelroll")
     tables = M.label_rollforward(spark, sf_dir, modality)
     n_delta = read_bucketed(spark, tables["delta"]).count()
     before = {

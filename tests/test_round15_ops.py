@@ -4,9 +4,9 @@ gets the full r14 lifecycle: persisted base cluster labels, the
 increment-linear live fold, the LSM delta-log roll, compaction, and
 the compaction POLICY (delta-growth trigger)."""
 
-import pytest
-
 from pyspark.sql import functions as F
+
+from conftest import forget_memo
 
 SF001 = "/root/testdata/sf0.01"
 
@@ -96,8 +96,7 @@ def test_text_labelroll_rolled_adoption(spark, sf_dir, monkeypatch):
 
     D.text_label_rollforward(spark, sf_dir)
     rung = D._text_label_rung()
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    forget_memo(L.roll_family(rung))
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -127,8 +126,7 @@ def test_text_label_compact_and_policy(spark, sf_dir):
     # restore a freshly-folded state so the delta is non-empty and the
     # policy decision is observable
     D.text_labelroll_restore_base(spark, sf_dir)
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    forget_memo(L.roll_family(rung))
     tables = D.text_label_rollforward(spark, sf_dir)
     assert read_bucketed(spark, tables["delta"]).count() > 0
     before = {
@@ -151,8 +149,7 @@ def test_text_label_compact_and_policy(spark, sf_dir):
     }
     assert before == after, "compaction changed the visible state"
     # a fresh session adopts the compacted (rolled) state
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    forget_memo(L.roll_family(rung))
     got = D.text_label_rollforward(spark, sf_dir)
     assert got == tables
     post = {
@@ -189,7 +186,7 @@ def test_semantic_labels_rolled_adoption(spark, sf_dir, monkeypatch):
     from smile_spark.sources import bucketed as BK
 
     D.semantic_label_rollforward(spark, sf_dir)
-    D._SEM_LABEL_READY.clear()
+    forget_memo("semantic_labels")
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
@@ -204,53 +201,6 @@ def test_semantic_labels_rolled_adoption(spark, sf_dir, monkeypatch):
     assert jobs == [], "rolled adoption ran a rebuild/fold job"
     assert D.semantic_labels_rolled(spark, sf_dir).count() > 0
     assert jobs == [], "the rolled reader ran a rebuild/fold job"
-
-
-def test_semantic_labelroll_crash_never_adopts_base(
-    spark, sf_dir, monkeypatch
-):
-    """The ADVICE-r14 crash ordering on the semantic verdict roll: a
-    crash after the append, before the rolled sidecar, leaves no
-    adoptable state; recovery rebuilds."""
-    import os
-
-    from smile_spark.operators import dedup as D
-    from smile_spark.sources import bucketed as BK
-
-    D.semantic_label_restore_base(spark, sf_dir)
-    path = BK.sidecar_path(spark, D._sem_label_table(sf_dir))
-    assert os.path.exists(path)
-    real_write_sidecar = BK.write_sidecar
-
-    def dying_write_sidecar(spark_, name, payload):
-        if payload.get("state") == "rolled":
-            raise RuntimeError("simulated process death pre-sidecar")
-        return real_write_sidecar(spark_, name, payload)
-
-    monkeypatch.setattr(BK, "write_sidecar", dying_write_sidecar)
-    with pytest.raises(RuntimeError, match="pre-sidecar"):
-        D.semantic_label_rollforward(spark, sf_dir)
-    assert not os.path.exists(path)
-    monkeypatch.setattr(BK, "write_sidecar", real_write_sidecar)
-    D._SEM_LABEL_READY.clear()
-    writes = []
-    real_write = BK.write_bucketed
-    monkeypatch.setattr(
-        BK,
-        "write_bucketed",
-        lambda *a, **k: (writes.append(a), real_write(*a, **k)),
-    )
-    rolled = {
-        tuple(r)
-        for r in D.semantic_labels_rolled(spark, sf_dir).collect()
-    }
-    assert len(writes) == 1, "recovery must take the full-rebuild arm"
-    live = {
-        tuple(r) for r in D._sem_base_verdicts(spark, sf_dir).collect()
-    } | {
-        tuple(r) for r in D._sem_fold_verdicts(spark, sf_dir).collect()
-    }
-    assert rolled == live
 
 
 def test_crossmodal_clusters_incremental_agrees_with_full(
@@ -315,8 +265,7 @@ def test_crossmodal_labelroll_rolled_adoption(
 
     M.crossmodal_label_rollforward(spark, sf_dir)
     rung = M._crossmodal_rung()
-    for key in [k for k in L._ROLL_READY if k[2] == rung.name]:
-        L._ROLL_READY.discard(key)
+    forget_memo(L.roll_family(rung))
     jobs = []
     monkeypatch.setattr(
         BK, "write_bucketed", lambda *a, **k: jobs.append(a)
